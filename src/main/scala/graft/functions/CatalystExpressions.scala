@@ -1285,6 +1285,12 @@ object BpeByteCodec {
   final class Vocab(val pairA: Array[Int],
                     val pairB: Array[Int]) extends Serializable {
     require(pairA.length == pairB.length)
+    // pairs pack as (a << 16) | b: ids in [0, 0xFFFF) keep the keys
+    // injective and never equal to the empty-slot value -1
+    require((pairA.iterator ++ pairB.iterator).forall(id =>
+        id >= 0 && id < 0xFFFF),
+      "merge pair ids must be in [0, 65535): a table over 65,279 merges " +
+        "would collide in the packed pair keys")
     val nMerges: Int = pairA.length
     // capacity: power of two >= 2x entries (load factor <= 0.5)
     private val cap: Int = {

@@ -912,22 +912,10 @@ object Dedup {
     * once (to build the bloom + the confirm side) and the BATCH never
     * shuffles against the full prior, only its fpp-sized candidate
     * sliver does. NULL-text rows are per-id unique (never cross-version
-    * duplicates), matching [[exact]]'s null-safe fingerprint rule.
-    *
-    * `bloom` hands in a pre-built filter covering (a superset of) the
-    * reference fingerprints, skipping the per-call bloom jobs entirely
-    * — the refresh loop's slope floor: [[graft.streaming
-    * .RefreshPipeline]] maintains ONE merged bloom across triggers
-    * (prior + every earlier accepted batch) so a trigger's exact tier
-    * pays O(batch) bloom work instead of re-aggregating the whole
-    * accepted history. Exactness is unaffected either way: the bloom
-    * only routes candidates into the confirming anti join. */
+    * duplicates), matching [[exact]]'s null-safe fingerprint rule. */
   def exactIncremental(batch: DataFrame, prior: DataFrame,
                        textCol: String, idCol: String,
-                       fpp: Double = 0.01,
-                       refFps: Option[DataFrame] = None,
-                       bloom: Option[org.apache.spark.util.sketch
-                         .BloomFilter] = None): DataFrame = {
+                       fpp: Double = 0.01): DataFrame = {
     // prior-drop BEFORE in-batch dedup: the anti join's two branches then
     // recompute only the row-local fingerprint projection over the batch
     // scan, never the dedup window shuffle (bloomAntiJoin evaluates its
@@ -935,69 +923,16 @@ object Dedup {
     // removes a WHOLE fingerprint group or none of it, so the in-batch
     // survivor per remaining group is unchanged.
     val withFp = batch.withColumn("__fp", T.fingerprint(col(textCol)))
-    val priorFp = refFps.getOrElse(exactFingerprints(prior, textCol))
-    val fresh = Joins.bloomAntiJoin(withFp, priorFp, "__fp", "__pfp", fpp,
-        preBuilt = bloom)
+    val fresh = Joins.bloomAntiJoin(withFp,
+        exactFingerprints(prior, textCol), "__fp", "__pfp", fpp)
       .drop("__fp")
     exact(fresh, textCol, idCol)
   }
 
-  /** [[exactIncremental]] with the reference split into its STABLE part
-    * (the prior corpus' fingerprints, cached once per run) and its
-    * GROWING part (the accepted-history ledger) and the bloom supplied
-    * by the caller — the refresh loop's steady-state exact tier.
-    *
-    * Why the split matters: the single-frame form unions both parts,
-    * and a union has no partitioning, so every trigger's confirm join
-    * re-shuffles and re-sorts the CORPUS-sized reference. Here the
-    * caller caches `stableFps` pre-partitioned and pre-sorted on
-    * `__pfp` (see [[graft.streaming.RefreshPipeline.run]]), so the
-    * stable confirm is a partition-local merge scan with ZERO exchange
-    * and zero sort on the reference side, every trigger; only the
-    * (compact, fingerprint-only) ledger side still pays a per-trigger
-    * shuffle, and only against the bloom-positive candidate sliver.
-    *
-    * Structure: ONE bloom probe splits the batch; bloom-negative rows
-    * bypass everything (definitely fresh), bloom-positive rows confirm
-    * against the two reference parts sequentially (anti vs a union ==
-    * sequential antis). The in-batch survivor rule is [[exact]]'s,
-    * applied after, exactly as [[exactIncremental]] orders it. The
-    * bloom must cover stable ∪ growing ([[graft.streaming
-    * .RefreshPipeline.FingerprintBloom]]'s invariant); extra members
-    * cost confirm work, a missing member would lose exactness and is
-    * on the caller. */
-  def exactIncrementalStaged(batch: DataFrame, textCol: String,
-                             idCol: String, stableFps: DataFrame,
-                             growingFps: Option[DataFrame],
-                             bloom: org.apache.spark.util.sketch
-                               .BloomFilter): DataFrame = {
-    import org.apache.spark.sql.graftglue.GraftGlue
-    val withFp = batch.withColumn("__fp", T.fingerprint(col(textCol)))
-    val probe = GraftGlue.column(graft.functions.BloomMightContainExpr(
-      GraftGlue.expression(withFp("__fp")), bloom))
-    val bypass = withFp.filter(col("__fp").isNull || !probe)
-    // alias projections preserve the cached frame's partitioning and
-    // ordering, so the merge join needs no reference-side exchange
-    val sKeys = stableFps.select(col("__pfp").as("__sk"))
-      .filter(col("__sk").isNotNull)
-    val afterStable = withFp.filter(probe)
-      .join(sKeys, col("__fp") === col("__sk"), "left_anti")
-    val confirmed = growingFps match {
-      case Some(g) =>
-        val gKeys = g.select(col("__pfp").as("__gk"))
-          .filter(col("__gk").isNotNull)
-        afterStable.join(gKeys, col("__fp") === col("__gk"), "left_anti")
-      case None => afterStable
-    }
-    exact(bypass.unionByName(confirmed).drop("__fp"), textCol, idCol)
-  }
-
   /** The prior side of [[exactIncremental]] — its normalized text
     * fingerprints as `__pfp` — exposed so a refresh loop deduping MANY
-    * drops against ONE prior corpus computes them once, caches them,
-    * and per trigger only unions the (tiny) fingerprints of docs it
-    * accepted since (pass via `exactIncremental(refFps = Some(...))`).
-    * Without this the prior's normalize+hash pass re-runs per trigger. */
+    * drops against ONE prior corpus computes them once and caches them
+    * ([[graft.streaming.RefreshPipeline.priorCaches]]). */
   def exactFingerprints(prior: DataFrame, textCol: String): DataFrame =
     prior.select(T.fingerprint(col(textCol)).as("__pfp"))
       .filter(col("__pfp").isNotNull)

@@ -9,12 +9,14 @@ import org.apache.spark.sql.functions.col
   * built ONCE per run and probed per trigger with a bounded candidate
   * set — the refresh loop's stable confirm side.
   *
-  * Why not the cached-DataFrame merge join ([[Dedup
-  * .exactIncrementalStaged]]'s shape): a sort-merge LEFT ANTI advances
-  * the reference iterator LINEARLY to each probe key, so any partition
-  * holding even one candidate scans essentially its whole cached slice
-  * — O(corpus) row comparisons per trigger no matter how small the
-  * batch. Here each fingerprint is packed to its two 64-bit halves and
+  * The candidates are the batch fingerprints the refresh loop's held
+  * bloom ([[graft.streaming.RefreshPipeline.FingerprintBloom]]) flags
+  * as possible members. Why an index and not a join against a cached
+  * fingerprint frame: a sort-merge LEFT ANTI advances the reference
+  * iterator LINEARLY to each probe key, so any partition holding even
+  * one candidate scans essentially its whole cached slice — O(corpus)
+  * row comparisons per trigger no matter how small the batch. Here each
+  * fingerprint is packed to its two 64-bit halves and
   * held as one SORTED long array per RANGE partition; the per-partition
   * (first, last) bounds live as O(partitions) driver state, so a probe
   * routes each candidate to exactly one partition, launches tasks ONLY
@@ -22,7 +24,7 @@ import org.apache.spark.sql.functions.col
   * ([[org.apache.spark.rdd.PartitionPruningRDD]]), and each task binary
   * searches: O(candidates x log(corpus/partitions)) total, flat in the
   * corpus. The arrays are exact (full 128-bit fingerprints) — this is
-  * the same membership test as the anti join, not a sketch.
+  * the same membership test as an anti join, not a sketch.
   *
   * Memory: 16 bytes per fingerprint (vs ~50 for the equivalent cached
   * UnsafeRow frame), MEMORY_AND_DISK so it degrades to disk instead of

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.BloomFilter
 
 /** Temporal join operators Spark lacks natively (SURVEY §7.3 "compose
   * existing ops where semantics allow").
@@ -207,54 +206,36 @@ object Joins {
     * source scan, the intended regime); callers feeding a derived frame
     * with shuffles/windows upstream should persist it first or restage
     * so only row-local work repeats (see Dedup.exactIncremental). NULL
-    * keys are kept, per anti-join semantics.
-    *
-    * `preBuilt` supplies the bloom instead of building it from `small`
-    * — the incremental-loop shape ([[graft.streaming.RefreshPipeline]]
-    * maintains one across triggers via `mergeInPlace`), which removes
-    * BOTH per-call reference jobs (the sizing count and the bloom
-    * aggregation). It must cover every non-null `small` key (a
-    * SUPERSET is fine: extra bloom members only route more rows into
-    * the confirming join, which stays exact; a MISSING member would
-    * let a duplicate bypass the confirm and is on the caller). */
+    * keys are kept, per anti-join semantics. */
   def bloomAntiJoin(large: DataFrame, small: DataFrame,
                     largeKey: String, smallKey: String,
                     fpp: Double = 0.01,
-                    expectedItems: Long = -1L,
-                    preBuilt: Option[BloomFilter] = None): DataFrame = {
+                    expectedItems: Long = -1L): DataFrame = {
     val (probe, keys, cond) =
-      bloomParts(large, small, largeKey, smallKey, fpp, expectedItems,
-        preBuilt)
+      bloomParts(large, small, largeKey, smallKey, fpp, expectedItems)
     large.filter(col(largeKey).isNull || !probe)
       .unionByName(large.filter(probe).join(keys, cond, "left_anti"))
   }
 
-  /** Shared prefilter plumbing — builds the bloom ONCE (or adopts the
-    * caller's) and returns (the probe predicate over `large`'s key,
-    * the null-free key frame of `small`, the confirm-join condition). */
+  /** Shared prefilter plumbing — builds the bloom ONCE and returns (the
+    * probe predicate over `large`'s key, the null-free key frame of
+    * `small`, the confirm-join condition). */
   private def bloomParts(large: DataFrame, small: DataFrame,
                          largeKey: String, smallKey: String,
-                         fpp: Double, expectedItems: Long,
-                         preBuilt: Option[BloomFilter] = None)
+                         fpp: Double, expectedItems: Long)
       : (Column, DataFrame, Column) = {
     import org.apache.spark.sql.graftglue.GraftGlue
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0,1): $fpp")
-    val probe = preBuilt match {
-      case Some(b) =>
-        GraftGlue.column(graft.functions.BloomMightContainExpr(
-          GraftGlue.expression(large(largeKey)), b))
-      case None =>
-        val nonNull = small.filter(col(smallKey).isNotNull)
-        // one count job on the reference side: sizes the bloom AND
-        // guards the empty-reference case (Spark's bloomFilter
-        // aggregate NPEs on 0 rows)
-        val nn = nonNull.count()
-        if (nn == 0L) lit(false) else {
-          val n = if (expectedItems > 0) expectedItems else nn
-          val bloom = nonNull.stat.bloomFilter(smallKey, n, fpp)
-          GraftGlue.column(graft.functions.BloomMightContainExpr(
-            GraftGlue.expression(large(largeKey)), bloom))
-        }
+    val nonNull = small.filter(col(smallKey).isNotNull)
+    // one count job on the reference side: sizes the bloom AND guards
+    // the empty-reference case (Spark's bloomFilter aggregate NPEs on
+    // 0 rows)
+    val nn = nonNull.count()
+    val probe = if (nn == 0L) lit(false) else {
+      val n = if (expectedItems > 0) expectedItems else nn
+      val bloom = nonNull.stat.bloomFilter(smallKey, n, fpp)
+      GraftGlue.column(graft.functions.BloomMightContainExpr(
+        GraftGlue.expression(large(largeKey)), bloom))
     }
     val keys = small.select(col(smallKey).as("__bloom_key"))
       .filter(col("__bloom_key").isNotNull)

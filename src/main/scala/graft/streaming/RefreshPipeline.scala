@@ -37,20 +37,19 @@ import graft.functions.{Bpe, BpeByteVocab}
   * Per-trigger cost discipline: every prior-side derivation — exact
   * fingerprints, minhash band postings, reference grams — is
   * trigger-invariant, so each is computed ONCE per run and cached
-  * (localCheckpoint, released on exit); a trigger pays only its own
+  * ([[priorCaches]], released on exit); a trigger pays only its own
   * batch's row-local passes, the bounded joins against those caches,
-  * and the O(batch) appends. The exact tier's two history-sized
-  * per-trigger terms are floored on top of that: the bloom over
-  * prior ∪ accepted history is a driver-held accumulator
-  * ([[FingerprintBloom]] — built once, O(batch) `mergeInPlace` per
-  * trigger), and the confirm join is split
-  * ([[graft.operators.Dedup.exactIncrementalStaged]]) so the
-  * corpus-sized stable side joins exchange-free against its
-  * pre-partitioned cache. What remains O(accepted history) per
-  * trigger: reading the (compact, fingerprint-only) ledger union for
-  * the growing confirm side — pennies next to the aggregation and
-  * corpus shuffle this discipline removes, and bounded further by
-  * only the bloom-positive candidate sliver reaching it.
+  * and the O(batch) appends. The exact tier confirms only CANDIDATES:
+  * a driver-held bloom over prior ∪ accepted history
+  * ([[FingerprintBloom]] — built once, O(batch) `putString` per
+  * trigger) picks the batch's bloom-positive fingerprints on the batch
+  * checkpoint's own job, and only those are looked up — in the prior
+  * through the [[graft.operators.FingerprintIndex]] probe
+  * (O(candidates · log corpus), flat in the corpus) and in the ledger
+  * through a prefix-pruned read of the earlier batches. What remains
+  * O(accepted history) per trigger is that (compact,
+  * fingerprint-only) ledger read, entered only when the bloom routes a
+  * candidate into it.
   *
   * Ledger delivery contract (the at-least-once crash window, closed):
   * the ledger is a set of per-trigger directories `ledgerDir/b<id>`,
@@ -73,12 +72,11 @@ object RefreshPipeline {
     * trigger re-aggregates a bloom over prior ∪ all earlier ledger
     * batches: O(accepted history) per trigger, the one per-trigger
     * term that grows with the corpus. With it the prior's bloom is
-    * built once and each trigger's accepted fingerprints are
-    * `mergeInPlace`d in O(batch) (blooms built with identical
-    * (capacity, fpp) are bit-compatible), so steady-state exact-tier
-    * cost is the batch's own aggregation plus a constant-size driver
-    * merge (~1.2 bytes/key at fpp 0.01 — size the fpp, not the
-    * corpus).
+    * built once and each trigger's accepted fingerprints are folded in
+    * with `putString` in O(batch) ([[advanceWith]]), so steady-state
+    * exact-tier cost is the batch's own probe plus O(batch) driver
+    * work on a constant-size filter (~1.2 bytes/key at fpp 0.01 — size
+    * the fpp, not the corpus).
     *
     * Crash/restart discipline: the accumulator is run-scoped driver
     * state, deliberately NOT persisted. [[bloomFor]] hands out the
@@ -86,10 +84,10 @@ object RefreshPipeline {
     * (`next == batchId`); a restart, a re-delivered trigger, or any
     * gap rebuilds from the confirm-side frame the caller already
     * assembled — which excludes the trigger's OWN ledger batch, so the
-    * self-masking window stays closed exactly as for the confirm join.
+    * self-masking window stays closed exactly as for the confirm.
     * Correctness never rests on the bloom's content: it must merely
     * cover the confirm reference (a superset is fine — extra members
-    * only route more candidates into the confirming anti join), and
+    * only route more candidates into the exact index/ledger confirm), and
     * both the held and rebuilt paths cover it by construction.
     * Saturation past `capacity` degrades fpp (more confirm work),
     * never exactness. */
@@ -107,8 +105,7 @@ object RefreshPipeline {
         case Some((b, next)) if next == batchId => b
         case _ =>
           // An empty reference (bootstrapping a fresh store: no prior
-          // corpus, no earlier ledger batches) must behave like the
-          // pre-bloom path's lit(false): nothing is a member. Spark's
+          // corpus, no earlier ledger batches) has no members. Spark's
           // bloomFilter aggregate NPEs on zero rows, so hand back an
           // empty filter of the same shape instead.
           countRebuild()
@@ -121,39 +118,15 @@ object RefreshPipeline {
       }
 
     /** Fold trigger `batchId`'s accepted fingerprints into the held
-      * bloom and advance the sequence. The caller passes None when the
-      * trigger accepted NOTHING (it already counted the frame for the
-      * ledger's observed metrics — re-probing emptiness here was one
-      * more per-trigger job, and Spark's bloomFilter aggregate NPEs on
-      * zero rows). Called AFTER the trigger's ledger publish — a
-      * failed trigger leaves the bloom unmerged, so its retry sees
+      * bloom and advance the sequence (an empty trigger passes an empty
+      * array: it adds nothing, and skipping the advance would force the
+      * next trigger into a needless rebuild). The trigger's ledger write
+      * observes the fingerprints — micro-batch bounded, the single-file
+      * ledger contract's size class — so this is O(batch) driver work
+      * and zero allocation. Called AFTER the trigger's ledger publish —
+      * a failed trigger leaves the bloom unmerged, so its retry sees
       * exactly the reference it should. A sequence break is not an
       * error: the next [[bloomFor]] rebuilds. */
-    def advance(batchId: Long, fps: Option[DataFrame]): Unit =
-      acc match {
-        case Some((b, next)) if next == batchId =>
-          // zero-row guard kept INSIDE advance (Spark's bloomFilter
-          // aggregate NPEs on empty input): a caller passing Some(empty)
-          // merges nothing instead of killing the trigger. Catch-skip
-          // rather than isEmpty so the common non-empty path pays no
-          // extra probe job.
-          fps.foreach { f =>
-            try b.mergeInPlace(f.stat.bloomFilter("__pfp", capacity, fpp))
-            catch { case _: NullPointerException => () }
-          }
-          acc = Some((b, batchId + 1L))
-        case _ => ()
-      }
-
-    /** [[advance]] with the accepted fingerprints already in hand (the
-      * trigger's ledger write observes them — micro-batch bounded, the
-      * single-file ledger contract's size class): `putString` folds
-      * them into the HELD bloom directly. The DataFrame form above
-      * builds a second CAPACITY-sized filter per trigger just to OR a
-      * few hundred members in — at a 10^9-fingerprint corpus that is a
-      * multi-GB allocation per trigger; this is O(batch) work and zero
-      * allocation. putString and the aggregate both hash the UTF-8
-      * bytes, so membership is identical either way. */
     def advanceWith(batchId: Long, fps: Array[String]): Unit =
       acc match {
         case Some((b, next)) if next == batchId =>
@@ -178,7 +151,7 @@ object RefreshPipeline {
     * non-empty trigger — the term that grows with accepted history
     * and that the bloom accumulator + prefix-bitmap sidecar exist to
     * floor. Records, per trigger: how many earlier ledger batches
-    * existed, how many leaf paths the confirm join actually read
+    * existed, how many leaf paths the ledger confirm actually read
     * (after any prefix pruning; 0 when the bloom routed no candidate
     * into the confirm), the total BYTES of those paths (the raw
     * O(history) input the flat-wall claim must beat), and the
@@ -332,36 +305,49 @@ object RefreshPipeline {
     }
   }
 
-  /** The trigger-invariant prior-side caches both drain entry points
-    * ([[run]], [[runManaged]]) seed once per run: exact-tier
-    * fingerprints (a plain checkpoint for the bloom-rebuild reference,
-    * plus a [[graft.operators.FingerprintIndex]] — range-partitioned
-    * sorted long-pair arrays with O(partitions) driver bounds — for the
-    * per-trigger stable confirm), near-tier band postings,
+  /** The trigger-invariant prior-side caches every trigger of a run
+    * shares: exact-tier fingerprints (`priorFps`, the bloom-rebuild
+    * reference) and their [[graft.operators.FingerprintIndex]] (the
+    * per-trigger prior confirm), near-tier band postings,
     * decontamination reference grams, and the bloom accumulator sized
-    * off the fingerprint count. The three branches are mutually
-    * independent one-off jobs, so they run OVERLAPPED (guide §2.6) and
-    * the prologue pays the longest instead of the sum; the caller
-    * releases the checkpoints AND the index on exit. */
-  private def priorCaches(prior: DataFrame, benchmark: DataFrame,
-                          textCol: String, numHashes: Int, bands: Int,
-                          decontamN: Int)
-      : (DataFrame, DataFrame, DataFrame, FingerprintBloom,
-         graft.operators.FingerprintIndex) = {
+    * off the fingerprint count. Built by [[priorCaches]]; the owner
+    * calls [[release]] once the last trigger has run. */
+  private[graft] final case class PriorCaches(priorFps: DataFrame,
+      postings: DataFrame, refGrams: DataFrame, bloom: FingerprintBloom,
+      fpIndex: graft.operators.FingerprintIndex) {
+    def release(): Unit = {
+      import org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint
+      releaseCheckpoint(priorFps)
+      releaseCheckpoint(postings)
+      releaseCheckpoint(refGrams)
+      fpIndex.release()
+    }
+  }
+
+  /** Build the [[PriorCaches]] for `prior`/`benchmark`: the fingerprint
+    * checkpoint plus its range-partitioned index (sorted long-pair
+    * arrays with O(partitions) driver bounds), the postings checkpoint
+    * (declaring its band-key layout), the reference grams checkpoint,
+    * and a bloom accumulator whose capacity covers the prior plus
+    * generous accepted-history headroom (overflow degrades fpp, never
+    * exactness). The three branches are mutually independent one-off
+    * jobs, so they run OVERLAPPED (guide §2.6) and the prologue pays
+    * the longest instead of the sum. */
+  private[graft] def priorCaches(prior: DataFrame, benchmark: DataFrame,
+                                 textCol: String, numHashes: Int,
+                                 bands: Int, decontamN: Int): PriorCaches = {
     val shufflePartitions = prior.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
     val ec = scala.concurrent.ExecutionContext.global
     // the postings cache DECLARES its band-key layout: without it every
     // trigger's band join re-exchanges (or re-broadcasts) the
-    // CORPUS-scale postings side — the same per-trigger O(corpus) class
-    // the exact tier's staged confirm removed; with it only the batch
-    // side of the near tier shuffles
+    // CORPUS-scale postings side; with it only the batch side of the
+    // near tier shuffles
     val postingsF = scala.concurrent.Future(
       org.apache.spark.sql.graftglue.GraftGlue.checkpointWithLayout(
         Dedup.nearPostings(prior, textCol,
           numHashes = numHashes, bands = bands, mode = Dedup.Portable),
-        "__pband", prior.sparkSession.conf
-          .get("spark.sql.shuffle.partitions").toInt))(ec)
+        "__pband", shufflePartitions))(ec)
     val refGramsF = scala.concurrent.Future(
       Dedup.ngramRefGrams(benchmark, textCol, n = decontamN)
         .localCheckpoint(true))(ec)
@@ -374,9 +360,9 @@ object RefreshPipeline {
     val refGrams = scala.concurrent.Await.result(refGramsF,
       scala.concurrent.duration.Duration.Inf)
     // index bounds already carry the count — no extra count job
-    val bloomAcc = new FingerprintBloom(fpp = 0.01,
+    val bloom = new FingerprintBloom(fpp = 0.01,
       capacity = 2L * math.max(fpIndex.count, 1L) + 100000L)
-    (priorFps, postings, refGrams, bloomAcc, fpIndex)
+    PriorCaches(priorFps, postings, refGrams, bloom, fpIndex)
   }
 
   /** One daemon carrier for the per-trigger index append so it overlaps
@@ -394,6 +380,25 @@ object RefreshPipeline {
         t
       })
 
+  /** Run `body` on [[appendPool]] with the calling thread's Spark-local
+    * properties (job group, cancel-on-interrupt, description, pool)
+    * mirrored onto the carrier, so its jobs cancel with the SAME group
+    * a serial execution would have used — the pool thread otherwise
+    * keeps whatever it inherited at creation. */
+  private def onAppendPool[A](sp: SparkSession)(body: => A)
+      : java.util.concurrent.Future[A] = {
+    val mirrored = Seq("spark.jobGroup.id", "spark.job.interruptOnCancel",
+        "spark.job.description", "spark.scheduler.pool")
+      .map(k => k -> sp.sparkContext.getLocalProperty(k))
+    appendPool.submit(new java.util.concurrent.Callable[A] {
+      override def call(): A = {
+        mirrored.foreach { case (k, v) =>
+          sp.sparkContext.setLocalProperty(k, v) }
+        body
+      }
+    })
+  }
+
   /** Fingerprint-count threshold above which the single-task ledger
     * batch write warns (see the publish site in [[processBatch]]): 10M
     * 16-byte fingerprints ≈ 160 MB through one task — still well
@@ -404,7 +409,7 @@ object RefreshPipeline {
   /** Fingerprint-prefix space for the ledger's prune metadata: each
     * batch dir carries a [[PrefixMarker]] sidecar holding the 64-bit
     * BITMAP of `pmod(xxhash64(__pfp), 64)` prefixes its fingerprints
-    * occupy, and a trigger's confirm join skips WHOLE batches provably
+    * occupy, and a trigger's ledger confirm skips WHOLE batches provably
     * disjoint from its bloom-positive candidates' prefix set.
     *
     * Why a bitmap sidecar and not a `partitionBy` layout: this term
@@ -461,89 +466,68 @@ object RefreshPipeline {
     * directly testable: compute the accepted docs against prior ∪
     * ledger-batches-below-`batchId`, commit the shard append (version
     * `batchId + 1`), optionally the index append (batch `batchId`),
-    * then publish this trigger's ledger batch. Idempotent under
-    * re-delivery by construction. */
+    * then publish this trigger's ledger batch and advance the bloom.
+    * Idempotent under re-delivery by construction. */
   private[graft] def processBatch(
-      batch: DataFrame, batchId: Long, prior: DataFrame,
-      benchmark: DataFrame, priorFps: DataFrame, postings: DataFrame,
-      refGrams: DataFrame, storeDir: String, ledgerDir: String,
+      batch: DataFrame, batchId: Long, caches: PriorCaches,
+      storeDir: String, ledgerDir: String,
       budget: Int, shardCol: String, idCol: String, textCol: String,
       numHashes: Int, bands: Int, threshold: Double, decontamN: Int,
       minMatches: Int, indexDir: Option[String], vecCol: String,
       shardRoot: Option[String] = None,
       indexRoot: Option[String] = None,
-      bloomAcc: Option[FingerprintBloom] = None,
       packSkew: Option[Boolean] = None,
       routeLog: Option[RouteLog] = None,
-      ledgerLog: Option[LedgerLog] = None,
-      fpIndex: Option[graft.operators.FingerprintIndex] = None): Unit = {
+      ledgerLog: Option[LedgerLog] = None): Unit = {
+    import org.apache.spark.sql.graftglue.GraftGlue
     val sp = batch.sparkSession
     // materialize the trigger's batch ONCE: the tiers below reference
-    // it through several plan branches (the bloom anti join alone
-    // evaluates its input twice), and each un-materialized branch
+    // it through several plan branches, and each un-materialized branch
     // re-executes the WHOLE upstream batch plan — ruinous when the
     // upstream is itself stateful (q173 routes a stream-stream join
     // into this chain: every re-run replays the join's state stores;
     // measured 71 s -> join-plus-chain cost once materialized)
     val tB0 = System.nanoTime()
-    val debug0 = sys.env.contains("GRAFT_RP_DEBUG")
-    val snap0 = if (debug0) TriggerStats.snapshot(sp) else null
+    val debug = sys.env.contains("GRAFT_RP_DEBUG")
+    val snap0 = if (debug) TriggerStats.snapshot(sp) else null
     // the exact-tier reference: cached prior fingerprints plus the
     // (tiny) ledger batches of STRICTLY EARLIER triggers — never this
     // trigger's own (see the delivery contract above). Listed BEFORE
     // the batch checkpoint (driver-side file listing, no jobs) so the
-    // index path below can resolve its bloom first and ride the
-    // candidate pass on the checkpoint job itself.
+    // bloom resolves first and the candidate pass rides the checkpoint
+    // job itself.
     val earlier = StoreFiles
       .publishedDirs(ledgerDir, "b", StoreFiles.hasLedgerParquet)
       .filter(_._1 < batchId).map(_._2)
-    // the ledger union, as a multi-path read of leaf paths so mixed
-    // (legacy unpartitioned + prefix-partitioned) batch layouts share
-    // one uniform __pfp-only schema; prefixes prune at the PATH level
-    def ledgerFps(prefixes: Option[Set[Int]]): Option[DataFrame] = {
-      val paths = ledgerLeafPaths(earlier, prefixes)
-      if (paths.isEmpty) None
-      else Some(sp.read.parquet(paths: _*).select(col("__pfp")))
+    // the bloom REBUILD reference (scanned on a sequence break only): a
+    // multi-path read of leaf paths, so mixed ledger batch layouts share
+    // one uniform __pfp-only schema
+    val refFps = ledgerLeafPaths(earlier, None) match {
+      case Seq() => caches.priorFps
+      case paths => caches.priorFps.unionByName(
+        sp.read.parquet(paths: _*).select(col("__pfp")))
     }
+    val bloom = caches.bloom.bloomFor(batchId, refFps)
+    // OBSERVE the row count plus the bloom-positive candidate
+    // (fingerprint, ledger-prefix) pairs on the checkpoint's own
+    // materialization job — the candidate pass, the empty-trigger
+    // probe and the prefix-set pass are metrics on a job the trigger
+    // already pays for, not jobs of their own
     val fpCol = graft.functions.TextFunctions.fingerprint(col(textCol))
-    // index path: resolve the bloom now (bloomFor touches only the
-    // prior caches and the ledger — never the batch; a first-trigger
-    // rebuild runs here instead of after the checkpoint, same total
-    // work) and OBSERVE the row count plus the bloom-positive
-    // candidate (fingerprint, ledger-prefix) pairs on the checkpoint's
-    // own materialization job — the candidate pass, the empty-trigger
-    // probe, and the old prefix-set job all collapse into metrics on a
-    // job the trigger already pays for.
-    val candObs: Option[(org.apache.spark.sql.Observation,
-        org.apache.spark.util.sketch.BloomFilter)] =
-      (bloomAcc, fpIndex) match {
-        case (Some(acc), Some(_)) =>
-          val refFps = ledgerFps(None) // the bloom REBUILD reference —
-            .map(priorFps.unionByName(_)) // scanned on a seq break only
-            .getOrElse(priorFps)
-          Some((org.apache.spark.sql.Observation(s"cands-b$batchId"),
-            acc.bloomFor(batchId, refFps)))
-        case _ => None
-      }
-    val toCheckpoint = candObs match {
-      case Some((ob, bloom)) =>
-        import org.apache.spark.sql.graftglue.GraftGlue
-        val probe = GraftGlue.column(
-          graft.functions.BloomMightContainExpr(
-            GraftGlue.expression(fpCol), bloom))
-        batch.observe(ob,
-          count(lit(1)).as("__n"),
-          // collect_list drops the nulls the when() leaves for
-          // non-candidates; bounded by the micro-batch contract
-          // (fpp x batch + true dups)
-          collect_list(when(fpCol.isNotNull && probe,
-            struct(fpCol.as("__fp"), pmod(xxhash64(fpCol),
-              lit(LedgerPrefixSpace.toLong)).cast("int").as("__pp"))))
-            .as("__cands"))
-      case None => batch
-    }
-    val b0 = toCheckpoint.localCheckpoint(true)
-    if (debug0)
+    val candObs = org.apache.spark.sql.Observation(s"cands-b$batchId")
+    val probe = GraftGlue.column(graft.functions.BloomMightContainExpr(
+      GraftGlue.expression(fpCol), bloom))
+    val b0 = batch.observe(candObs,
+        count(lit(1)).as("__n"),
+        // collect_list drops the nulls the when() leaves for
+        // non-candidates; bounded by the micro-batch contract
+        // (fpp x batch + true dups)
+        collect_list(when(fpCol.isNotNull && probe,
+          struct(fpCol.as("__fp"), pmod(xxhash64(fpCol),
+            lit(LedgerPrefixSpace.toLong)).cast("int").as("__pp"))))
+          .as("__cands"))
+      .localCheckpoint(true)
+    if (debug)
       println(f"[rp] b$batchId checkpoint ${(System.nanoTime() - tB0) / 1e9}%.2fs rows=${b0.count()}")
     val tRest = System.nanoTime()
     try {
@@ -555,18 +539,10 @@ object RefreshPipeline {
     // discipline: versions/deltas/ledger batches are batchId-keyed,
     // so the gap reads as "nothing arrived" to every verb (read,
     // asOf, describe, compact) and to later triggers' ledger scans.
-    // (The bloom sequence still advances: an empty trigger adds no
-    // fingerprints, and skipping the advance would force the next
-    // trigger into a needless rebuild. The observed count makes the
-    // probe free on the index path.)
-    val isEmptyTrigger = candObs match {
-      case Some((ob, _)) => ob.get("__n").asInstanceOf[Long] == 0L
-      case None => b0.isEmpty
+    // The bloom sequence still advances (see advanceWith).
+    if (candObs.get("__n").asInstanceOf[Long] == 0L) {
+      caches.bloom.advanceWith(batchId, Array.empty); return
     }
-    if (isEmptyTrigger) {
-      bloomAcc.foreach(_.advance(batchId, None)); return
-    }
-    val debug = sys.env.contains("GRAFT_RP_DEBUG")
     def staged[A](label: String)(body: => A): A =
       if (!debug) body
       else {
@@ -576,174 +552,72 @@ object RefreshPipeline {
         println(f"[rp] b$batchId $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
         a
       }
-    val exactKept = bloomAcc match {
-      // the steady-state path: held merged bloom + INDEX-probed confirm.
-      // The previous shape anti-joined the batch's bloom-positive sliver
-      // against the corpus-sized fingerprint cache — zero-exchange by
-      // layout, but a sort-merge anti advances the reference iterator
-      // linearly, so every trigger SCANNED essentially the whole cache:
-      // O(corpus) per trigger. Now the sliver is collected (bounded by
-      // the micro-batch contract — fpp x batch + true dups), routed to
-      // the index's range partitions via O(partitions) driver bounds,
-      // and only partitions HOLDING a candidate are launched, each a
-      // binary search: O(candidates x log corpus) per trigger, flat in
-      // the corpus. Membership is exact (full 128-bit fingerprints), so
-      // the kept set is identical; the ledger confirm reads the same
-      // prefix-pruned paths as before, with the candidate prefixes now
-      // computed inside the SAME collect instead of their own job.
-      case Some(acc) if fpIndex.isDefined =>
-        val ix = fpIndex.get
-        import org.apache.spark.sql.graftglue.GraftGlue
-        val candRows = candObs.get._1.get("__cands")
-          .asInstanceOf[Seq[_]].map(_.asInstanceOf[
-            org.apache.spark.sql.Row])
-        val cands = candRows.map(_.getString(0)).toArray
-        val prefixes = candRows.map(_.getInt(1)).toSet
-        // a confirm-side match has an EQUAL fingerprint, hence an equal
-        // prefix — pruned ledger batches are provably match-free
-        val confirmPaths: Seq[String] =
-          if (cands.isEmpty || earlier.isEmpty) Seq.empty
-          else ledgerLeafPaths(earlier, Some(prefixes))
-        ledgerLog.foreach { ll =>
-          def bytesOf(f: java.io.File): Long =
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty)
-                .map(bytesOf).sum
-            else f.length()
-          ll.record(LedgerRow(batchId, earlier.size,
-            confirmPaths.size,
-            confirmPaths.map(p => bytesOf(new java.io.File(p))).sum,
-            acc.rebuilds))
-        }
-        // the two confirm lookups are independent given the candidate
-        // set (stable index vs ledger paths) — overlap them on the
-        // append carrier (guide §2.6; free before the appends start),
-        // with the trigger's Spark-local properties mirrored so
-        // cancellation groups match serial execution
-        val ledgerHitsF: java.util.concurrent.Future[Array[String]] =
-          if (confirmPaths.isEmpty)
-            java.util.concurrent.CompletableFuture.completedFuture(
-              Array.empty[String])
-          else {
-            val mirrored = Seq("spark.jobGroup.id",
-                "spark.job.interruptOnCancel", "spark.job.description",
-                "spark.scheduler.pool")
-              .map(k => k -> sp.sparkContext.getLocalProperty(k))
-            appendPool.submit(
-              new java.util.concurrent.Callable[Array[String]] {
-                override def call(): Array[String] = {
-                  mirrored.foreach { case (k, v) =>
-                    sp.sparkContext.setLocalProperty(k, v) }
-                  val keys = graft.functions.Utf8SortedKeys.sorted(cands)
-                  val pfp = sp.read.parquet(confirmPaths: _*)
-                    .select(col("__pfp"))
-                  pfp.filter(GraftGlue.column(
-                      graft.functions.Utf8InSortedArrayExpr(
-                        GraftGlue.expression(pfp("__pfp")), keys)))
-                    .collect().map(_.getString(0))
-                }
-              })
-          }
-        val stableHits: Array[String] =
-          if (cands.isEmpty) Array.empty
-          else staged("exactconfirm") { ix.hits(cands) }
-        val ledgerHits: Array[String] = staged("exactledger") {
-          try ledgerHitsF.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        }
-        val allHits = stableHits ++ ledgerHits
-        if (allHits.isEmpty) Dedup.exact(b0, textCol, idCol)
-        else {
-          // drop = fingerprint CONFIRMED present in stable ∪ earlier
-          // ledger; null fingerprints always pass (null-text rows are
-          // per-id unique, exactIncremental's rule). One row-local
-          // binary-search filter — no join, no exchange.
-          val hitKeys = graft.functions.Utf8SortedKeys.sorted(allHits)
-          val kept = b0.filter(fpCol.isNull || !GraftGlue.column(
-            graft.functions.Utf8InSortedArrayExpr(
-              GraftGlue.expression(fpCol), hitKeys)))
-          Dedup.exact(kept, textCol, idCol)
-        }
-      // bloom accumulator WITHOUT a prior index (direct callers/tests):
-      // the split-confirm merge-join shape, unchanged
-      case Some(acc) =>
-        val refFps = ledgerFps(None) // the bloom REBUILD reference —
-          .map(priorFps.unionByName(_)) // only scanned on a seq break
-          .getOrElse(priorFps)
-        val bloom = acc.bloomFor(batchId, refFps)
-        // the candidate-prefix pass (one O(batch) row-local job) is
-        // only worth running when some batch is PRUNABLE: markers are
-        // ~free to read, so check them first — a history of dense
-        // bitmaps (large accepted batches occupy every prefix) cannot
-        // be pruned by any candidate set, and the job would be pure
-        // per-trigger overhead (the partitioned-ledger lesson,
-        // REFRESH_SLOPE.json). Deliberately conservative: a SMALL
-        // candidate set could in principle still prune a dense batch
-        // (pruning tests intersection, not density), but candidate
-        // size isn't known until the pass this gate decides whether to
-        // run — forgone pruning costs a read of data the confirm join
-        // filters anyway, never correctness
-        val anyPrunable = earlier.exists { d =>
-          val marker = StoreFiles
-            .readMarker(new java.io.File(d, PrefixMarker))
-            .flatMap(_.get("bits"))
-            .map(h => java.lang.Long.parseUnsignedLong(h, 16))
-          marker.exists(b =>
-            java.lang.Long.bitCount(b) <= LedgerPrefixSpace / 2) ||
-            Option(d.listFiles()).getOrElse(Array.empty)
-              .exists(f => f.isDirectory && f.getName.startsWith("__pp="))
-        }
-        val confirmPaths: Seq[String] =
-          if (earlier.isEmpty) Seq.empty
-          else if (!anyPrunable) ledgerLeafPaths(earlier, None)
-          else {
-            // the candidate prefix set: a confirm-side match has an
-            // EQUAL fingerprint, hence an equal prefix, so pruned
-            // batches are provably match-free; bloom-negative rows
-            // bypass the confirm join entirely and need no coverage
-            import org.apache.spark.sql.graftglue.GraftGlue
-            val fps = b0.select(graft.functions.TextFunctions
-              .fingerprint(col(textCol)).as("__fp"))
-            val probe = GraftGlue.column(
-              graft.functions.BloomMightContainExpr(
-                GraftGlue.expression(fps("__fp")), bloom))
-            val prefixes = fps
-              .filter(col("__fp").isNotNull && probe)
-              .select(pmod(xxhash64(col("__fp")),
-                lit(LedgerPrefixSpace.toLong)).cast("int").as("__pp"))
-              .distinct().collect().map(_.getInt(0)).toSet
-            ledgerLeafPaths(earlier, Some(prefixes))
-          }
-        val confirmLedger =
-          if (confirmPaths.isEmpty) None
-          else Some(sp.read.parquet(confirmPaths: _*)
-            .select(col("__pfp")))
-        // ledger-cost telemetry: the confirm read's actual inputs
-        // (paths + bytes — the O(accepted history) raw term) and the
-        // bloom's cumulative rebuild count, so a long-horizon artifact
-        // gates the amortization claims on observations
-        ledgerLog.foreach { ll =>
-          def bytesOf(f: java.io.File): Long =
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty)
-                .map(bytesOf).sum
-            else f.length()
-          ll.record(LedgerRow(batchId, earlier.size,
-            confirmPaths.size,
-            confirmPaths.map(p => bytesOf(new java.io.File(p))).sum,
-            acc.rebuilds))
-        }
-        Dedup.exactIncrementalStaged(b0, textCol, idCol, priorFps,
-          confirmLedger, bloom)
-      case None =>
-        val refFps = ledgerFps(None).map(priorFps.unionByName(_))
-          .getOrElse(priorFps)
-        Dedup.exactIncremental(b0, prior, textCol, idCol,
-          refFps = Some(refFps))
+    // the exact tier: the bloom-positive candidates (collected above)
+    // are confirmed against the prior through the INDEX — routed to
+    // its range partitions via O(partitions) driver bounds, only
+    // partitions HOLDING a candidate launched, each a binary search:
+    // O(candidates x log corpus) per trigger, flat in the corpus — and
+    // against the earlier ledger batches through a prefix-pruned read.
+    // Membership is exact (full 128-bit fingerprints).
+    val candRows = candObs.get("__cands").asInstanceOf[Seq[_]]
+      .map(_.asInstanceOf[org.apache.spark.sql.Row])
+    val cands = candRows.map(_.getString(0)).toArray
+    val prefixes = candRows.map(_.getInt(1)).toSet
+    // a confirm-side match has an EQUAL fingerprint, hence an equal
+    // prefix — pruned ledger batches are provably match-free
+    val confirmPaths: Seq[String] =
+      if (cands.isEmpty || earlier.isEmpty) Seq.empty
+      else ledgerLeafPaths(earlier, Some(prefixes))
+    // ledger-cost telemetry: the confirm read's actual inputs (paths +
+    // bytes — the O(accepted history) raw term) and the bloom's
+    // cumulative rebuild count, so a long-horizon artifact gates the
+    // amortization claims on observations
+    ledgerLog.foreach { ll =>
+      def bytesOf(f: java.io.File): Long =
+        if (f.isDirectory)
+          Option(f.listFiles()).getOrElse(Array.empty).map(bytesOf).sum
+        else f.length()
+      ll.record(LedgerRow(batchId, earlier.size, confirmPaths.size,
+        confirmPaths.map(p => bytesOf(new java.io.File(p))).sum,
+        caches.bloom.rebuilds))
     }
+    // the two confirm lookups are independent given the candidate set
+    // (prior index vs ledger paths) — overlap them on the append
+    // carrier (guide §2.6; free before the appends start)
+    val ledgerHitsF: java.util.concurrent.Future[Array[String]] =
+      if (confirmPaths.isEmpty)
+        java.util.concurrent.CompletableFuture.completedFuture(
+          Array.empty[String])
+      else onAppendPool(sp) {
+        val keys = graft.functions.Utf8SortedKeys.sorted(cands)
+        val pfp = sp.read.parquet(confirmPaths: _*).select(col("__pfp"))
+        pfp.filter(GraftGlue.column(
+            graft.functions.Utf8InSortedArrayExpr(
+              GraftGlue.expression(pfp("__pfp")), keys)))
+          .collect().map(_.getString(0))
+      }
+    val stableHits: Array[String] =
+      if (cands.isEmpty) Array.empty
+      else staged("exactconfirm") { caches.fpIndex.hits(cands) }
+    val ledgerHits: Array[String] = staged("exactledger") {
+      try ledgerHitsF.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      }
+    }
+    val allHits = stableHits ++ ledgerHits
+    val exactKept =
+      if (allHits.isEmpty) Dedup.exact(b0, textCol, idCol)
+      else {
+        // drop = fingerprint CONFIRMED present in prior ∪ earlier
+        // ledger; null fingerprints always pass (null-text rows are
+        // per-id unique, exactIncremental's rule). One row-local
+        // binary-search filter — no join, no exchange.
+        val hitKeys = graft.functions.Utf8SortedKeys.sorted(allHits)
+        Dedup.exact(b0.filter(fpCol.isNull || !GraftGlue.column(
+          graft.functions.Utf8InSortedArrayExpr(
+            GraftGlue.expression(fpCol), hitKeys))), textCol, idCol)
+      }
     // the near tier and the decontamination tier are PER-ROW decisions
     // against FIXED references (prior postings / benchmark grams) — a
     // row's fate never depends on in-batch peers or on the other
@@ -761,8 +635,8 @@ object RefreshPipeline {
     // instead of two.
     val nearHits = Dedup.nearIncrementalHitIds(b0, textCol, idCol,
       numHashes = numHashes, bands = bands, threshold = threshold,
-      mode = Dedup.Portable, postings = postings)
-    val contamIds = Dedup.ngramContaminatedIds(b0, refGrams, textCol,
+      mode = Dedup.Portable, postings = caches.postings)
+    val contamIds = Dedup.ngramContaminatedIds(b0, caches.refGrams, textCol,
       idCol, n = decontamN, minMatches = minMatches)
     val dropIds = nearHits.select(col("__bid").as("__xid"))
       .unionByName(contamIds.select(col("__mid").as("__xid")))
@@ -857,23 +731,7 @@ object RefreshPipeline {
       // micro-batch contract, so this overlaps driver/planning latency,
       // not executor capacity)
       if (indexRoot.isDefined || indexDir.isDefined) {
-        // mirror the trigger thread's Spark-local properties (job
-        // group, cancel-on-interrupt, description) onto the carrier so
-        // the index append's jobs cancel with the SAME group a serial
-        // execution would have used — the pool thread otherwise keeps
-        // whatever it inherited at creation
-        val mirrored = Seq("spark.jobGroup.id",
-            "spark.job.interruptOnCancel", "spark.job.description",
-            "spark.scheduler.pool")
-          .map(k => k -> sp.sparkContext.getLocalProperty(k))
-        val second = appendPool.submit(
-          new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = {
-              mirrored.foreach { case (k, v) =>
-                sp.sparkContext.setLocalProperty(k, v) }
-              indexAppend()
-            }
-          })
+        val second = onAppendPool(sp)(indexAppend())
         // always JOIN the index side before leaving the trigger (no
         // append may outlive its trigger); the first failure wins and
         // is rethrown with its ORIGINAL type (unwrapping the
@@ -901,7 +759,6 @@ object RefreshPipeline {
           graft.functions.TextFunctions.fingerprint(col(textCol))
             .as("__pfp"))
         .filter(col("__pfp").isNotNull)
-      var acceptedN = -1L // set by the publish body; -1 = body skipped
       var acceptedArr: Array[String] = null // observed by the write job
       staged("ledger") { StoreFiles.publishOnce(
         s"$ledgerDir/.staging-b$batchId",
@@ -937,7 +794,7 @@ object RefreshPipeline {
             .write.mode("overwrite").parquet(staging)
           val agg = ob.get
           val bitmap = agg("__bits").asInstanceOf[Long]
-          acceptedN = agg("__n").asInstanceOf[Long]
+          val acceptedN = agg("__n").asInstanceOf[Long]
           acceptedArr = agg("__fps").asInstanceOf[Seq[_]]
             .map(_.asInstanceOf[String]).toArray
           if (acceptedN > LedgerSingleFileWarnRows)
@@ -954,24 +811,20 @@ object RefreshPipeline {
       // merge AFTER the ledger publish: a trigger that fails anywhere
       // above leaves the bloom at its pre-trigger state, so the retry
       // references exactly prior ∪ earlier batches again
-      staged("bloomadv") { bloomAcc.foreach { a =>
+      staged("bloomadv") {
         // the ledger write already OBSERVED the accepted fingerprints —
-        // fold them into the held bloom driver-side (putString: zero
-        // jobs, zero capacity-sized allocation; the DataFrame merge
-        // built a second corpus-capacity filter per trigger just to OR
-        // a few hundred members in). Only a SKIPPED publish
-        // (re-delivered trigger, nothing observed) still pays one
-        // bounded collect of the same micro-batch-contract rows.
+        // fold them into the held bloom driver-side (zero jobs). Only a
+        // SKIPPED publish (re-delivered trigger, nothing observed)
+        // still pays one bounded collect of the same
+        // micro-batch-contract rows.
         val arr =
           if (acceptedArr != null) acceptedArr
           else acceptedFps.collect().map(_.getString(0))
-        a.advanceWith(batchId, arr)
-      } }
-    } finally
-      org.apache.spark.sql.graftglue.GraftGlue
-        .releaseCheckpoint(cleaned)
+        caches.bloom.advanceWith(batchId, arr)
+      }
+    } finally GraftGlue.releaseCheckpoint(cleaned)
     } finally {
-      if (debug0) {
+      if (debug) {
         val s1 = TriggerStats.snapshot(sp)
         println(f"[rp] b$batchId rest ${(System.nanoTime() - tRest) / 1e9}%.2fs " +
           s"jobs=${s1._1 - snap0._1} stages=${s1._2 - snap0._2} " +
@@ -980,7 +833,7 @@ object RefreshPipeline {
           .sortBy(-_._2).map { case (k, v) => s"$k=$v" }.mkString(" "))
         TriggerStats.resetDesc()
       }
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(b0)
+      GraftGlue.releaseCheckpoint(b0)
     }
   }
 
@@ -1016,19 +869,12 @@ object RefreshPipeline {
           ledgerLog: Option[LedgerLog] = None): Unit = {
     // every prior-side derivation is trigger-invariant (the
     // incremental contract references the kept corpus only), so all
-    // three are computed ONCE here and cached across every trigger —
-    // without this, re-deriving the prior's fingerprints / minhash
-    // postings / reference grams dominates each micro-batch at corpus
-    // scale: the exact-tier fingerprints, the near-tier band postings,
-    // and the decontamination reference grams. The fingerprints are
-    // cached PRE-PARTITIONED and PRE-SORTED on __pfp (localCheckpoint
-    // preserves both), so every trigger's stable confirm join is a
-    // partition-local merge scan — zero exchange, zero sort — on the
-    // corpus side (see Dedup.exactIncrementalStaged).
-    // the exact tier's bloom accumulator: capacity sized once for the
-    // prior corpus plus generous accepted-history headroom (overflow
-    // degrades fpp, never exactness — see FingerprintBloom)
-    val (priorFps, postings, refGrams, bloomAcc, fpIndex) =
+    // of them — the exact-tier fingerprints and their index, the
+    // near-tier band postings, the decontamination reference grams and
+    // the bloom — are built ONCE here and shared by every trigger;
+    // without this, re-deriving them dominates each micro-batch at
+    // corpus scale
+    val caches =
       priorCaches(prior, benchmark, textCol, numHashes, bands, decontamN)
     // provider swap, set/restored exactly as StreamJoinScale does: the
     // session conf is read at query START, so set-before/restore-after
@@ -1042,12 +888,11 @@ object RefreshPipeline {
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          processBatch(batch, batchId, prior, benchmark, priorFps,
-            postings, refGrams, storeDir, ledgerDir, budget, shardCol,
-            idCol, textCol, numHashes, bands, threshold, decontamN,
-            minMatches, indexDir, vecCol, bloomAcc = Some(bloomAcc),
+          processBatch(batch, batchId, caches, storeDir, ledgerDir,
+            budget, shardCol, idCol, textCol, numHashes, bands,
+            threshold, decontamN, minMatches, indexDir, vecCol,
             packSkew = packSkew, routeLog = routeLog,
-            ledgerLog = ledgerLog, fpIndex = Some(fpIndex))
+            ledgerLog = ledgerLog)
         }
         .start()
       q.awaitTermination()
@@ -1061,10 +906,7 @@ object RefreshPipeline {
         case Some(p) => prior.sparkSession.conf.set(providerKey, p)
         case None => prior.sparkSession.conf.unset(providerKey)
       }
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(priorFps)
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(postings)
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(refGrams)
-      fpIndex.release()
+      caches.release()
     }
   }
 
@@ -1138,7 +980,7 @@ object RefreshPipeline {
       s"compactEvery must be >= 1: $compactEvery")
     require(tierFanout.forall(_ >= 2),
       s"tierFanout must be >= 2: $tierFanout")
-    val (priorFps, postings, refGrams, bloomAcc, fpIndex) =
+    val caches =
       priorCaches(prior, benchmark, textCol, numHashes, bands, decontamN)
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val providerPrev = prior.sparkSession.conf.getOption(providerKey)
@@ -1200,14 +1042,12 @@ object RefreshPipeline {
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
-          processBatch(batch, batchId, prior, benchmark, priorFps,
-            postings, refGrams, storeDir = "", ledgerDir, budget,
-            shardCol, idCol, textCol, numHashes, bands, threshold,
-            decontamN, minMatches, indexDir = None, vecCol,
+          processBatch(batch, batchId, caches, storeDir = "", ledgerDir,
+            budget, shardCol, idCol, textCol, numHashes, bands,
+            threshold, decontamN, minMatches, indexDir = None, vecCol,
             shardRoot = Some(shardRoot), indexRoot = indexRoot,
-            bloomAcc = Some(bloomAcc), packSkew = packSkew,
-            routeLog = routeLog, ledgerLog = ledgerLog,
-            fpIndex = Some(fpIndex))
+            packSkew = packSkew, routeLog = routeLog,
+            ledgerLog = ledgerLog)
           finishReady(force = false)
           if ((batchId + 1) % compactEvery == 0) {
             // depth > 0 at a scheduled point = the previous point's
@@ -1279,10 +1119,7 @@ object RefreshPipeline {
         case Some(p) => prior.sparkSession.conf.set(providerKey, p)
         case None => prior.sparkSession.conf.unset(providerKey)
       }
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(priorFps)
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(postings)
-      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(refGrams)
-      fpIndex.release()
+      caches.release()
     }
   }
 }

@@ -13,10 +13,12 @@ import graft.streaming.RefreshPipeline
   *  1. the bloom over prior ∪ accepted history: REBUILT O(history)
   *     only on a sequence break, otherwise advanced O(batch)
   *     ([[RefreshPipeline.FingerprintBloom]]);
-  *  2. the confirm join's ledger read: O(history) BYTES at a
-  *     ~16 B/fingerprint constant, entered only by the bloom-positive
-  *     candidate sliver, pruned at the path level by the
-  *     prefix-bitmap sidecars when the candidates allow.
+  *  2. the ledger confirm read: O(history) BYTES at a
+  *     ~16 B/fingerprint constant, entered only when the held bloom
+  *     flags a candidate, pruned at the path level by the
+  *     prefix-bitmap sidecars when the candidates allow. (The prior
+  *     side of the confirm is the [[graft.operators.FingerprintIndex]]
+  *     probe — O(candidates · log corpus), no history term.)
   *
   * Those claims were design-argued and spec-pinned at small scale but
   * never MEASURED over a long horizon the way REFRESH_OVERRUN measured

@@ -112,6 +112,21 @@ class BpeEncoderSpec extends SparkSpec {
     }
   }
 
+  test("merge pair ids at or above 0xFFFF are refused: the packed " +
+      "(a << 16) | b pair keys would collide") {
+    // (0, 0x10000) packs to the key of (1, 0); (0xFFFF, 0xFFFF) packs
+    // to -1, the empty-slot value; a negative id is no symbol at all
+    Seq((Array(0), Array(0x10000)), (Array(0xFFFF), Array(0xFFFF)),
+        (Array(0x10000), Array(0)), (Array(-1), Array(0))).foreach {
+      case (a, b) =>
+        intercept[IllegalArgumentException](new BpeByteCodec.Vocab(a, b))
+    }
+    // the largest legal id still builds and ranks
+    val v = new BpeByteCodec.Vocab(Array(0xFFFE, 1), Array(0, 0xFFFE))
+    assert(v.rank(0xFFFE, 0) == 0 && v.rank(1, 0xFFFE) == 1 &&
+      v.rank(1, 0) == -1)
+  }
+
   test("long-document cost: rank-bucketed encode beats the per-rank " +
       "full-pass reference on the committed ~1k-merge vocabulary") {
     val (pa, pb) = Bpe.pairSymbols(BpeByteVocab.merges)

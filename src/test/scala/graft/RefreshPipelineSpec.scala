@@ -18,22 +18,29 @@ class RefreshPipelineSpec extends SparkSpec {
   private def docsDF(rows: (Long, String, String)*) =
     rows.toDF("doc_id", "source", "text")
 
+  // the prior caches exactly as run() builds them, released after body
+  private def withCaches[A](prior: org.apache.spark.sql.DataFrame,
+                            benchmark: org.apache.spark.sql.DataFrame)(
+      body: RefreshPipeline.PriorCaches => A): A = {
+    val caches = RefreshPipeline.priorCaches(prior, benchmark, "text",
+      numHashes = 32, bands = 8, decontamN = 5)
+    try body(caches) finally caches.release()
+  }
+
   // drive one trigger exactly as the foreachBatch body would —
   // processBatch is the unit the streaming run() re-delivers
   private def trigger(batch: org.apache.spark.sql.DataFrame,
-                      batchId: Long, prior: org.apache.spark.sql.DataFrame,
-                      benchmark: org.apache.spark.sql.DataFrame,
+                      batchId: Long, caches: RefreshPipeline.PriorCaches,
                       base: java.nio.file.Path,
                       indexDir: Option[String] = None): Unit =
-    RefreshPipeline.processBatch(batch, batchId, prior, benchmark,
-      Dedup.exactFingerprints(prior, "text"),
-      Dedup.nearPostings(prior, "text", numHashes = 32, bands = 8,
-        mode = Dedup.Portable),
-      Dedup.ngramRefGrams(benchmark, "text", n = 5),
+    RefreshPipeline.processBatch(batch, batchId, caches,
       s"$base/store", s"$base/ledger", budget = 16,
       shardCol = "source", idCol = "doc_id", textCol = "text",
       numHashes = 32, bands = 8, threshold = 0.8, decontamN = 5,
       minMatches = 2, indexDir = indexDir, vecCol = "embedding")
+
+  private def emb = transform(sequence(lit(0), lit(7)),
+    i => sin(col("doc_id") * 3 + i).cast("float"))
 
   test("a re-delivered trigger whose ledger batch already published " +
       "(the post-commit crash window) keeps its docs: no self-masking") {
@@ -48,38 +55,40 @@ class RefreshPipelineSpec extends SparkSpec {
       val batch = docsDF(
         (3L, "a", "echo foxtrot golf hotel india"),
         (6L, "b", "juliet kilo lima mike november"))
-      trigger(batch, 0L, prior, benchmark, base)
-      def storedTokens() = ShardSink.read(spark, s"$base/store")
-        .agg(sum(col("n_tokens").cast("long"))).as[Long].collect().head
-      val after1 = storedTokens()
-      assert(StoreFiles
-        .publishedDirs(s"$base/ledger", "b", StoreFiles.hasLedgerParquet)
-        .map(_._1) == Seq(0L)) // the trigger's own ledger batch is up
-      // RE-DELIVERY of trigger 0 with its ledger batch b0 already
-      // published — exactly the state a crash between the ledger
-      // publish and the checkpoint advance leaves. The reference is
-      // built only from batches < 0 (none), so the re-run keeps the
-      // same docs, finds v1 committed, and no-ops — it must NOT see
-      // its own fingerprints, drop everything, and commit nothing
-      trigger(batch, 0L, prior, benchmark, base)
-      assert(storedTokens() == after1)
-      // and the harder half of the window: ledger published, store
-      // commit LOST (crash between the two under the OLD ordering —
-      // with publish-after-commit this state needs the store rolled
-      // back by hand, but the reference rule alone must still heal
-      // it). The re-run's anti-join reference excludes b0, so the
-      // accepted docs are re-derived identically and the store commit
-      // is REPUBLISHED, not silently skipped as an empty version.
-      StoreFiles.deleteRec(new java.io.File(s"$base/store/v1"))
-      trigger(batch, 0L, prior, benchmark, base)
-      assert(storedTokens() == after1,
-        "re-delivered trigger self-masked against its own ledger batch")
-      // a LATER trigger does reference b0: the same text re-arriving
-      // under a new id in batch 1 is dropped as a cross-drop duplicate
-      val rebatch = docsDF((9L, "a", "echo foxtrot golf hotel india"))
-      trigger(rebatch, 1L, prior, benchmark, base)
-      assert(storedTokens() == after1,
-        "later trigger failed to dedup against the accepted ledger")
+      withCaches(prior, benchmark) { caches =>
+        trigger(batch, 0L, caches, base)
+        def storedTokens() = ShardSink.read(spark, s"$base/store")
+          .agg(sum(col("n_tokens").cast("long"))).as[Long].collect().head
+        val after1 = storedTokens()
+        assert(StoreFiles
+          .publishedDirs(s"$base/ledger", "b", StoreFiles.hasLedgerParquet)
+          .map(_._1) == Seq(0L)) // the trigger's own ledger batch is up
+        // RE-DELIVERY of trigger 0 with its ledger batch b0 already
+        // published — exactly the state a crash between the ledger
+        // publish and the checkpoint advance leaves. The reference is
+        // built only from batches < 0 (none), so the re-run keeps the
+        // same docs, finds v1 committed, and no-ops — it must NOT see
+        // its own fingerprints, drop everything, and commit nothing
+        trigger(batch, 0L, caches, base)
+        assert(storedTokens() == after1)
+        // and the harder half of the window: ledger published, store
+        // commit LOST (crash between the two under the OLD ordering —
+        // with publish-after-commit this state needs the store rolled
+        // back by hand, but the reference rule alone must still heal
+        // it). The re-run's anti-join reference excludes b0, so the
+        // accepted docs are re-derived identically and the store commit
+        // is REPUBLISHED, not silently skipped as an empty version.
+        StoreFiles.deleteRec(new java.io.File(s"$base/store/v1"))
+        trigger(batch, 0L, caches, base)
+        assert(storedTokens() == after1,
+          "re-delivered trigger self-masked against its own ledger batch")
+        // a LATER trigger does reference b0: the same text re-arriving
+        // under a new id in batch 1 is dropped as a cross-drop duplicate
+        val rebatch = docsDF((9L, "a", "echo foxtrot golf hotel india"))
+        trigger(rebatch, 1L, caches, base)
+        assert(storedTokens() == after1,
+          "later trigger failed to dedup against the accepted ledger")
+      }
     } finally rmTree(base)
   }
 
@@ -95,9 +104,7 @@ class RefreshPipelineSpec extends SparkSpec {
         (7L, "a", "uniform victor whiskey xray"),
         (8L, "b", "yankee zulu alfa beta"))
       // deterministic embedding column shared by prior + batch docs
-      val priorE = prior.withColumn("embedding",
-        transform(sequence(lit(0), lit(7)),
-          i => sin(col("doc_id") * 3 + i).cast("float")))
+      val priorE = prior.withColumn("embedding", emb)
       val benchmark = prior.limit(0)
       ShardSink.append(spark,
         prior.withColumn("__ids",
@@ -113,101 +120,103 @@ class RefreshPipelineSpec extends SparkSpec {
       val batch = docsDF(
         (9L, "a", "india juliet kilo lima"),
         (10L, "b", "alpha bravo charlie delta"))
-        .withColumn("embedding",
-          transform(sequence(lit(0), lit(7)),
-            i => sin(col("doc_id") * 3 + i).cast("float")))
-      trigger(batch, 0L, prior, benchmark, base,
-        indexDir = Some(s"$base/ix"))
-      val served = VectorIndexSink.read(spark, s"$base/ix", "doc_id")
-        .encoded.select("doc_id").as[Long].collect().toSet
-      assert(served == Set(1L, 2L, 3L, 4L, 7L, 8L, 9L),
-        s"index serves $served, want the prior ids + accepted {9}")
-      // the duplicate landed in neither store: the shard view equals
-      // the one-shot pack of prior + the accepted doc only
-      val want = graft.operators.Curate.packTokenIds(
-        prior.unionByName(docsDF((9L, "a", "india juliet kilo lima")))
-          .withColumn("__ids",
-            Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
-        "__ids", "doc_id", 16, "source")
-        .select("source", "seq_id", "token_ids").collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> r.getSeq[Int](2))
-        .toMap
-      val got = ShardSink.read(spark, s"$base/store")
-        .select("source", "seq_id", "token_ids").collect()
-        .map(r => (r.getString(0), r.getLong(1)) -> r.getSeq[Int](2))
-        .toMap
-      assert(got == want)
-      // re-delivery: both stores already committed their batch keys —
-      // nothing doubles
-      trigger(batch, 0L, prior, benchmark, base,
-        indexDir = Some(s"$base/ix"))
-      assert(VectorIndexSink.read(spark, s"$base/ix", "doc_id")
-        .encoded.count() == 7L)
+        .withColumn("embedding", emb)
+      withCaches(prior, benchmark) { caches =>
+        trigger(batch, 0L, caches, base, indexDir = Some(s"$base/ix"))
+        val served = VectorIndexSink.read(spark, s"$base/ix", "doc_id")
+          .encoded.select("doc_id").as[Long].collect().toSet
+        assert(served == Set(1L, 2L, 3L, 4L, 7L, 8L, 9L),
+          s"index serves $served, want the prior ids + accepted {9}")
+        // the duplicate landed in neither store: the shard view equals
+        // the one-shot pack of prior + the accepted doc only
+        val want = graft.operators.Curate.packTokenIds(
+          prior.unionByName(docsDF((9L, "a", "india juliet kilo lima")))
+            .withColumn("__ids",
+              Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
+          "__ids", "doc_id", 16, "source")
+          .select("source", "seq_id", "token_ids").collect()
+          .map(r => (r.getString(0), r.getLong(1)) -> r.getSeq[Int](2))
+          .toMap
+        val got = ShardSink.read(spark, s"$base/store")
+          .select("source", "seq_id", "token_ids").collect()
+          .map(r => (r.getString(0), r.getLong(1)) -> r.getSeq[Int](2))
+          .toMap
+        assert(got == want)
+        // re-delivery: both stores already committed their batch keys —
+        // nothing doubles
+        trigger(batch, 0L, caches, base, indexDir = Some(s"$base/ix"))
+        assert(VectorIndexSink.read(spark, s"$base/ix", "doc_id")
+          .encoded.count() == 7L)
+      }
     } finally rmTree(base)
   }
 
-  test("exactIncrementalStaged == exactIncremental on every row class: " +
-      "stable dups, ledger dups, in-batch dups, nulls, fresh") {
-    val prior = docsDF(
-      (1L, "a", "alpha bravo charlie"),
-      (2L, "b", "delta echo foxtrot"))
-    val ledger = docsDF((100L, "a", "golf hotel india"))
-    val batch = docsDF(
-      (201L, "a", "alpha bravo charlie"), // dup of stable
-      (202L, "b", "golf hotel india"),    // dup of the growing ledger
-      (203L, "a", "juliet kilo lima"),    // fresh, kept
-      (204L, "b", "juliet kilo lima"),    // in-batch dup: 203 survives
-      (206L, "b", "mike november oscar")) // fresh, kept
-      .unionByName(Seq((205L, "a")).toDF("doc_id", "source")
-        .withColumn("text", lit(null).cast("string")))
-    val stableFps = org.apache.spark.sql.graftglue.GraftGlue
-      .checkpointWithLayout(Dedup.exactFingerprints(prior, "text"),
-        "__pfp", 4)
-    val ledgerFps = Dedup.exactFingerprints(ledger, "text")
-    val refFps = stableFps.unionByName(ledgerFps)
-    val bloom = refFps.stat.bloomFilter("__pfp", 100L, 0.01)
-    val staged = Dedup.exactIncrementalStaged(batch, "text", "doc_id",
-        stableFps, Some(ledgerFps), bloom)
-      .select("doc_id").as[Long].collect().toSet
-    val plain = Dedup.exactIncremental(batch, prior, "text", "doc_id",
-        refFps = Some(refFps))
-      .select("doc_id").as[Long].collect().toSet
-    assert(staged == plain && staged == Set(203L, 205L, 206L),
-      s"staged=$staged plain=$plain")
-    // a bloom that is a strict SUPERSET of the reference (covers a
-    // fingerprint no confirm side holds) must not change the result —
-    // the one-sided-error contract the accumulator relies on
-    bloom.putString("not-a-real-fingerprint")
-    val superset = Dedup.exactIncrementalStaged(batch, "text", "doc_id",
-        stableFps, Some(ledgerFps), bloom)
-      .select("doc_id").as[Long].collect().toSet
-    assert(superset == plain)
-    // plan pin: at corpus scale the stable confirm is a merge join
-    // that must not exchange OR sort the reference side — the cache is
-    // already hash-partitioned and sorted on __pfp. (At spec scale the
-    // planner would broadcast the tiny reference — also exchange-free
-    // on the cache, but not the shape under pin — so force SMJ.)
-    val prevBroadcast =
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAdaptive = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+  test("one exact path, two triggers, every row class (stable dups, " +
+      "ledger dups, in-batch dups, nulls, fresh, superset bloom) == " +
+      "exactIncremental over prior + earlier accepts") {
+    val base = java.nio.file.Files.createTempDirectory("graft_rpc_")
     try {
-      val plan = Dedup.exactIncrementalStaged(batch, "text", "doc_id",
-          stableFps, None, bloom)
-        .queryExecution.executedPlan
-      val smj = plan.collectFirst {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec
-            if j.joinType.sql == "LEFT ANTI" => j }
-      assert(smj.isDefined, plan.toString)
-      val refSide = smj.get.right.toString
-      assert(!refSide.contains("Exchange") && !refSide.contains("Sort"),
-        s"reference side re-shuffled or re-sorted:\n$refSide")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAdaptive)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-        prevBroadcast)
-    }
+      val prior = docsDF(
+        (1L, "a", "alpha bravo charlie"),
+        (2L, "b", "delta echo foxtrot"),
+        (3L, "a", "quebec romeo sierra tango"),
+        (4L, "b", "uniform victor whiskey xray"),
+        (7L, "a", "yankee zulu amber basil"),
+        (8L, "b", "cedar dune ember fjord"))
+      val benchmark = prior.limit(0)
+      ShardSink.append(spark,
+        prior.withColumn("__ids",
+          Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
+        "__ids", "doc_id", 16, "source", s"$base/store")
+      Similarity.ivfPqSave(
+        Similarity.ivfPqBuild(prior.withColumn("embedding", emb),
+          nLists = 2, m = 2, kCodes = 4, iterations = 2, idCol = "doc_id"),
+        s"$base/ix")
+      val b0 = docsDF(
+        (100L, "a", "golf hotel india"),    // fresh, kept -> ledger
+        (101L, "b", "delta echo foxtrot"))  // dup of prior
+      val b1 = docsDF(
+        (201L, "a", "alpha bravo charlie"), // dup of prior
+        (202L, "b", "golf hotel india"),    // dup of the b0 ledger batch
+        (203L, "a", "juliet kilo lima"),    // fresh, kept
+        (204L, "b", "juliet kilo lima"),    // in-batch dup: 203 survives
+        (206L, "b", "mike november oscar")) // fresh, kept
+        .unionByName(Seq((205L, "a")).toDF("doc_id", "source")
+          .withColumn("text", lit(null).cast("string")))
+      def served() = VectorIndexSink.read(spark, s"$base/ix", "doc_id")
+        .encoded.select("doc_id").as[Long].collect().toSet
+      def idsOf(df: org.apache.spark.sql.DataFrame) =
+        df.select("doc_id").as[Long].collect().toSet
+      withCaches(prior, benchmark) { caches =>
+          val before0 = served()
+          trigger(b0.withColumn("embedding", emb), 0L, caches, base,
+            indexDir = Some(s"$base/ix"))
+          val kept0 = served() -- before0
+          assert(kept0 == idsOf(Dedup.exactIncremental(b0, prior, "text",
+            "doc_id")) && kept0 == Set(100L), s"trigger 0 kept $kept0")
+          // the held bloom for trigger 1 made a strict SUPERSET of the
+          // reference: a fresh doc's fingerprint and a non-fingerprint.
+          // Extra members only route more candidates into the exact
+          // confirm, so the kept set must not change
+          val fresh206 = Dedup.exactFingerprints(
+            b1.filter(col("doc_id") === 206L), "text").as[String].head()
+          val held = caches.bloom.bloomFor(1L, prior.limit(0))
+          held.putString(fresh206)
+          held.putString("not-a-real-fingerprint")
+          val before1 = served()
+          trigger(b1.withColumn("embedding", emb), 1L, caches, base,
+            indexDir = Some(s"$base/ix"))
+          val kept1 = served() -- before1
+          val earlierAccepts = b0.filter(col("doc_id").isin(kept0.toSeq: _*))
+          val want1 = idsOf(Dedup.exactIncremental(b1,
+            prior.unionByName(earlierAccepts), "text", "doc_id"))
+          assert(kept1 == want1 && kept1 == Set(203L, 205L, 206L),
+            s"trigger 1 kept $kept1, exactIncremental $want1")
+          // the superset was the bloom trigger 1 actually probed with:
+          // the sequence stayed unbroken, so nothing was rebuilt
+          assert(caches.bloom.rebuilds == 1L)
+      }
+    } finally rmTree(base)
   }
 
   test("FingerprintBloom: unbroken sequence reuses the held bloom, a " +
@@ -220,13 +229,15 @@ class RefreshPipelineSpec extends SparkSpec {
     val might = (b: org.apache.spark.util.sketch.BloomFilter,
                  fps: org.apache.spark.sql.DataFrame) =>
       fps.as[String].collect().forall(b.mightContainString)
+    val arr = (fps: org.apache.spark.sql.DataFrame) =>
+      fps.as[String].collect()
     val acc = new RefreshPipeline.FingerprintBloom(0.01, 1000L)
     // first trigger: rebuild from the confirm frame (prior only)
     val bl0 = acc.bloomFor(0L, prior)
     assert(might(bl0, prior) && !might(bl0, b0))
-    acc.advance(0L, Some(b0))
+    acc.advanceWith(0L, arr(b0))
     // unbroken: the held bloom now covers prior + b0 with no rebuild
-    // (same instance — mergeInPlace mutated it)
+    // (same instance — putString mutated it)
     val bl1 = acc.bloomFor(1L, prior.unionByName(b0))
     assert((bl1 eq bl0) && might(bl1, b0))
     // a failed trigger never called advance: its RETRY still sees the
@@ -235,11 +246,11 @@ class RefreshPipelineSpec extends SparkSpec {
     assert((blRetry eq bl0) && !might(blRetry, b1))
     // sequence break (restart resumed at a later id): rebuilt from the
     // caller's confirm frame, which is the full reference again
-    acc.advance(1L, Some(b1))
+    acc.advanceWith(1L, arr(b1))
     val blBroken = acc.bloomFor(5L, prior.unionByName(b0).unionByName(b1))
     assert(might(blBroken, b1) && might(blBroken, prior))
     // empty-trigger advance keeps the sequence unbroken without a merge
-    acc.advance(5L, None)
+    acc.advanceWith(5L, Array.empty)
     assert(acc.bloomFor(6L, prior) eq blBroken)
     // bootstrapping a FRESH store: an empty reference rebuilds to an
     // empty bloom (nothing is a member) instead of the 0-row
@@ -276,6 +287,18 @@ class RefreshPipelineSpec extends SparkSpec {
     graft.tools.RefreshScale.check(passes.head.copy(
       perTriggerWallS = minWalls,
       flatnessRatio = graft.tools.RefreshScale.flatness(minWalls)))
+  }
+
+  test("LedgerLog: an unbroken 3-trigger run records exactly one row " +
+      "per non-empty trigger, all after the run's single bloom build") {
+    val ll = new RefreshPipeline.LedgerLog
+    val r = graft.tools.RefreshScale.run(spark, prior = 400,
+      triggers = 3, batchRows = 100, ledgerLog = Some(ll))
+    assert(r.accepted == 240 + 5, s"accepted ${r.accepted}")
+    val rows = ll.rows
+    assert(rows.map(_.batchId) == Seq(0L, 1L, 2L), rows)
+    assert(rows.map(_.earlierBatches) == Seq(0, 1, 2), rows)
+    assert(rows.forall(_.bloomRebuilds == 1L), rows)
   }
 
   test("pack-skew strategies are output-identical through the full " +
@@ -338,83 +361,74 @@ class RefreshPipelineSpec extends SparkSpec {
         prior.withColumn("__ids",
           Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
         "__ids", "doc_id", 16, "source", s"$base/store")
-      val bloom = new RefreshPipeline.FingerprintBloom(0.01, 1000L)
-      def bloomTrigger(batch: org.apache.spark.sql.DataFrame,
-                       id: Long): Unit =
-        RefreshPipeline.processBatch(batch, id, prior, benchmark,
-          Dedup.exactFingerprints(prior, "text"),
-          Dedup.nearPostings(prior, "text", numHashes = 32, bands = 8,
-            mode = Dedup.Portable),
-          Dedup.ngramRefGrams(benchmark, "text", n = 5),
-          s"$base/store", s"$base/ledger", budget = 16,
-          shardCol = "source", idCol = "doc_id", textCol = "text",
-          numHashes = 32, bands = 8, threshold = 0.8, decontamN = 5,
-          minMatches = 2, indexDir = None, vecCol = "embedding",
-          bloomAcc = Some(bloom))
-      bloomTrigger(docsDF(
-        (5L, "a", "echo foxtrot golf hotel"),
-        (6L, "b", "india juliet kilo lima")), 0L)
-      // the published batch carries ONE parquet file plus the prefix
-      // bitmap sidecar, atomically (both were inside the staged dir)
-      val b0 = new java.io.File(s"$base/ledger/b0")
-      val marker = StoreFiles.readMarker(
-        new java.io.File(b0, RefreshPipeline.PrefixMarker))
-      assert(marker.exists(_.contains("bits")),
-        "ledger batch missing its prefix bitmap sidecar")
-      val bits = java.lang.Long.parseUnsignedLong(
-        marker.get("bits"), 16)
-      assert(bits != 0L, "accepted batch must occupy some prefix")
-      assert(Option(b0.listFiles()).getOrElse(Array.empty)
-        .count(_.getName.endsWith(".parquet")) == 1,
-        "ledger batch should be one parquet file")
-      assert(StoreFiles.hasLedgerParquet(b0))
-      // trigger 1 carries an exact dup of a trigger-0 ACCEPT: the
-      // pruned confirm join must still drop it (the dup's prefix
-      // partition is in the candidate set by construction)
-      bloomTrigger(docsDF(
-        (7L, "a", "echo foxtrot golf hotel"),
-        (8L, "b", "mike november oscar papa")), 1L)
-      val kept = ShardSink.read(spark, s"$base/store")
-        .select("seq_id").as[Long].collect().toSet
-      assert(!kept.isEmpty)
-      val b1 = spark.read.parquet(
-          RefreshPipeline.ledgerLeafPaths(
-            Seq(new java.io.File(s"$base/ledger/b1")), None): _*)
-        .count()
-      assert(b1 == 1L, s"trigger 1 accepted $b1 fps, want 1 (dup of " +
-        "the b0-accepted doc must be confirm-dropped via the pruned read)")
-      // batch selection: a batch whose bitmap intersects the candidate
-      // prefix set is kept WHOLE; a provably disjoint one is skipped;
-      // None (the bloom-rebuild reference) always keeps everything
-      val occupied = (0 until 64).filter(k => (bits >>> k & 1L) == 1L)
-      assert(RefreshPipeline.ledgerLeafPaths(
-        Seq(b0), Some(Set(occupied.head)))
-        == Seq(b0.getAbsolutePath))
-      val disjoint = (0 until 64).toSet -- occupied.toSet
-      if (disjoint.nonEmpty)
+      withCaches(prior, benchmark) { caches =>
+        def bloomTrigger(batch: org.apache.spark.sql.DataFrame,
+                         id: Long): Unit = trigger(batch, id, caches, base)
+        bloomTrigger(docsDF(
+          (5L, "a", "echo foxtrot golf hotel"),
+          (6L, "b", "india juliet kilo lima")), 0L)
+        // the published batch carries ONE parquet file plus the prefix
+        // bitmap sidecar, atomically (both were inside the staged dir)
+        val b0 = new java.io.File(s"$base/ledger/b0")
+        val marker = StoreFiles.readMarker(
+          new java.io.File(b0, RefreshPipeline.PrefixMarker))
+        assert(marker.exists(_.contains("bits")),
+          "ledger batch missing its prefix bitmap sidecar")
+        val bits = java.lang.Long.parseUnsignedLong(
+          marker.get("bits"), 16)
+        assert(bits != 0L, "accepted batch must occupy some prefix")
+        assert(Option(b0.listFiles()).getOrElse(Array.empty)
+          .count(_.getName.endsWith(".parquet")) == 1,
+          "ledger batch should be one parquet file")
+        assert(StoreFiles.hasLedgerParquet(b0))
+        // trigger 1 carries an exact dup of a trigger-0 ACCEPT: the
+        // pruned ledger confirm must still drop it (the dup's prefix
+        // partition is in the candidate set by construction)
+        bloomTrigger(docsDF(
+          (7L, "a", "echo foxtrot golf hotel"),
+          (8L, "b", "mike november oscar papa")), 1L)
+        val kept = ShardSink.read(spark, s"$base/store")
+          .select("seq_id").as[Long].collect().toSet
+        assert(!kept.isEmpty)
+        val b1 = spark.read.parquet(
+            RefreshPipeline.ledgerLeafPaths(
+              Seq(new java.io.File(s"$base/ledger/b1")), None): _*)
+          .count()
+        assert(b1 == 1L, s"trigger 1 accepted $b1 fps, want 1 (dup of " +
+          "the b0-accepted doc must be confirm-dropped via the pruned read)")
+        // batch selection: a batch whose bitmap intersects the candidate
+        // prefix set is kept WHOLE; a provably disjoint one is skipped;
+        // None (the bloom-rebuild reference) always keeps everything
+        val occupied = (0 until 64).filter(k => (bits >>> k & 1L) == 1L)
         assert(RefreshPipeline.ledgerLeafPaths(
-          Seq(b0), Some(Set(disjoint.head))).isEmpty,
-          "disjoint-prefix batch should be skipped whole")
-      assert(RefreshPipeline.ledgerLeafPaths(Seq(b0), None)
-        == Seq(b0.getAbsolutePath))
-      // legacy layouts degrade safely: a marker-less dir is never
-      // pruned; a round-13.0 __pp=K partitioned dir prunes by subdir
-      val legacy = new java.io.File(s"$base/legacy_ledger/b9")
-      Dedup.exactFingerprints(prior, "text")
-        .write.parquet(legacy.getAbsolutePath)
-      val withLegacy = RefreshPipeline.ledgerLeafPaths(
-        Seq(b0, legacy), Some(Set(disjoint.head)))
-      assert(withLegacy == Seq(legacy.getAbsolutePath),
-        s"legacy dir must survive pruning whole: $withLegacy")
-      val partitioned = new java.io.File(s"$base/legacy_pp/b8")
-      Dedup.exactFingerprints(prior, "text")
-        .withColumn("__pp", lit(5))
-        .write.partitionBy("__pp").parquet(partitioned.getAbsolutePath)
-      assert(RefreshPipeline.ledgerLeafPaths(
-          Seq(partitioned), Some(Set(5)))
-        == Seq(new java.io.File(partitioned, "__pp=5").getAbsolutePath))
-      assert(RefreshPipeline.ledgerLeafPaths(
-        Seq(partitioned), Some(Set(6))).isEmpty)
+          Seq(b0), Some(Set(occupied.head)))
+          == Seq(b0.getAbsolutePath))
+        val disjoint = (0 until 64).toSet -- occupied.toSet
+        if (disjoint.nonEmpty)
+          assert(RefreshPipeline.ledgerLeafPaths(
+            Seq(b0), Some(Set(disjoint.head))).isEmpty,
+            "disjoint-prefix batch should be skipped whole")
+        assert(RefreshPipeline.ledgerLeafPaths(Seq(b0), None)
+          == Seq(b0.getAbsolutePath))
+        // legacy layouts degrade safely: a marker-less dir is never
+        // pruned; a round-13.0 __pp=K partitioned dir prunes by subdir
+        val legacy = new java.io.File(s"$base/legacy_ledger/b9")
+        Dedup.exactFingerprints(prior, "text")
+          .write.parquet(legacy.getAbsolutePath)
+        val withLegacy = RefreshPipeline.ledgerLeafPaths(
+          Seq(b0, legacy), Some(Set(disjoint.head)))
+        assert(withLegacy == Seq(legacy.getAbsolutePath),
+          s"legacy dir must survive pruning whole: $withLegacy")
+        val partitioned = new java.io.File(s"$base/legacy_pp/b8")
+        Dedup.exactFingerprints(prior, "text")
+          .withColumn("__pp", lit(5))
+          .write.partitionBy("__pp").parquet(partitioned.getAbsolutePath)
+        assert(RefreshPipeline.ledgerLeafPaths(
+            Seq(partitioned), Some(Set(5)))
+          == Seq(new java.io.File(partitioned, "__pp=5").getAbsolutePath))
+        assert(RefreshPipeline.ledgerLeafPaths(
+          Seq(partitioned), Some(Set(6))).isEmpty)
+      }
     } finally rmTree(base)
   }
 
@@ -429,47 +443,38 @@ class RefreshPipelineSpec extends SparkSpec {
         prior.withColumn("__ids",
           Bpe.byteTokenIds(col("text"), BpeByteVocab.merges)),
         "__ids", "doc_id", 16, "source", s"$base/store")
-      val bloom = new RefreshPipeline.FingerprintBloom(0.01, 1000L)
-      def bloomTrigger(batch: org.apache.spark.sql.DataFrame,
-                       id: Long): Unit =
-        RefreshPipeline.processBatch(batch, id, prior, benchmark,
-          Dedup.exactFingerprints(prior, "text"),
-          Dedup.nearPostings(prior, "text", numHashes = 32, bands = 8,
-            mode = Dedup.Portable),
-          Dedup.ngramRefGrams(benchmark, "text", n = 5),
-          s"$base/store", s"$base/ledger", budget = 16,
-          shardCol = "source", idCol = "doc_id", textCol = "text",
-          numHashes = 32, bands = 8, threshold = 0.8, decontamN = 5,
-          minMatches = 2, indexDir = None, vecCol = "embedding",
-          bloomAcc = Some(bloom))
-      bloomTrigger(docsDF((5L, "a", "echo foxtrot golf hotel")), 0L)
-      // trigger 1 is the watermark-flush no-data batch
-      bloomTrigger(docsDF().limit(0), 1L)
-      def storeVersions() = new java.io.File(s"$base/store").listFiles()
-        .filter(_.getName.matches("v\\d+")).map(_.getName).sorted.toSeq
-      def ledgerBatches() = StoreFiles
-        .publishedDirs(s"$base/ledger", "b", StoreFiles.hasLedgerParquet)
-        .map(_._1)
-      assert(storeVersions() == Seq("v0", "v1"),
-        s"empty trigger committed a store version: ${storeVersions()}")
-      assert(ledgerBatches() == Seq(0L),
-        s"empty trigger published a ledger batch: ${ledgerBatches()}")
-      // trigger 2 commits under ITS OWN keys (v3 / b2 — the gap reads
-      // as "nothing arrived") and still dedups against b0's accepts
-      bloomTrigger(docsDF(
-        (7L, "a", "echo foxtrot golf hotel"),   // dup of b0's accept
-        (8L, "b", "india juliet kilo lima")), 2L)
-      assert(storeVersions() == Seq("v0", "v1", "v3"),
-        s"trigger 2 should commit v3: ${storeVersions()}")
-      assert(ledgerBatches() == Seq(0L, 2L))
-      val b2 = spark.read.parquet(RefreshPipeline.ledgerLeafPaths(
-        Seq(new java.io.File(s"$base/ledger/b2")), None): _*).count()
-      assert(b2 == 1L,
-        s"dup of the b0 accept must still be confirm-dropped, got $b2")
-      // re-delivery of the empty trigger stays a no-op
-      bloomTrigger(docsDF().limit(0), 1L)
-      assert(storeVersions() == Seq("v0", "v1", "v3")
-        && ledgerBatches() == Seq(0L, 2L))
+      withCaches(prior, benchmark) { caches =>
+        def bloomTrigger(batch: org.apache.spark.sql.DataFrame,
+                         id: Long): Unit = trigger(batch, id, caches, base)
+        bloomTrigger(docsDF((5L, "a", "echo foxtrot golf hotel")), 0L)
+        // trigger 1 is the watermark-flush no-data batch
+        bloomTrigger(docsDF().limit(0), 1L)
+        def storeVersions() = new java.io.File(s"$base/store").listFiles()
+          .filter(_.getName.matches("v\\d+")).map(_.getName).sorted.toSeq
+        def ledgerBatches() = StoreFiles
+          .publishedDirs(s"$base/ledger", "b", StoreFiles.hasLedgerParquet)
+          .map(_._1)
+        assert(storeVersions() == Seq("v0", "v1"),
+          s"empty trigger committed a store version: ${storeVersions()}")
+        assert(ledgerBatches() == Seq(0L),
+          s"empty trigger published a ledger batch: ${ledgerBatches()}")
+        // trigger 2 commits under ITS OWN keys (v3 / b2 — the gap reads
+        // as "nothing arrived") and still dedups against b0's accepts
+        bloomTrigger(docsDF(
+          (7L, "a", "echo foxtrot golf hotel"),   // dup of b0's accept
+          (8L, "b", "india juliet kilo lima")), 2L)
+        assert(storeVersions() == Seq("v0", "v1", "v3"),
+          s"trigger 2 should commit v3: ${storeVersions()}")
+        assert(ledgerBatches() == Seq(0L, 2L))
+        val b2 = spark.read.parquet(RefreshPipeline.ledgerLeafPaths(
+          Seq(new java.io.File(s"$base/ledger/b2")), None): _*).count()
+        assert(b2 == 1L,
+          s"dup of the b0 accept must still be confirm-dropped, got $b2")
+        // re-delivery of the empty trigger stays a no-op
+        bloomTrigger(docsDF().limit(0), 1L)
+        assert(storeVersions() == Seq("v0", "v1", "v3")
+          && ledgerBatches() == Seq(0L, 2L))
+      }
     } finally rmTree(base)
   }
 
