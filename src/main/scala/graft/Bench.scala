@@ -64,6 +64,17 @@ object Bench {
     } catch { case _: Throwable => -1.0 }
   }
 
+  /** The checkout's commit, or `unavailable` outside a git work tree
+    * (or without git) — recorded so an artifact names its code. */
+  private[graft] def gitSha(): String =
+    try {
+      val p = new ProcessBuilder("git", "rev-parse", "HEAD")
+        .redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+      if (p.waitFor() == 0 && out.matches("[0-9a-f]{40}")) out
+      else "unavailable"
+    } catch { case _: java.io.IOException => "unavailable" }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -193,7 +204,7 @@ object Bench {
           .map { case (k, v) => "\"" + esc(k) + "\":" + sec(v) }
           .mkString("{", ",", "}")
       }
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"calibration":${sec(calibration)}$calIoField,"queries":$dq,"failed":$df,"components":$comps,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"cpus":$cpus,"git_sha":"${gitSha()}","calibration":${sec(calibration)}$calIoField,"queries":$dq,"failed":$df,"components":$comps,"sf":"$sfDir"}"""
     }
     // a FILTERED probe (min-over-N adjudication of a few queries) must
     // never clobber the committed full-surface artifact — its detail

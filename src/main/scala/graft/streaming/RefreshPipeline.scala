@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Dedup
@@ -185,6 +185,33 @@ object RefreshPipeline {
 
   /** See [[autoPackSkew]]. */
   private[graft] val AutoPackSkewFloor = 10000L
+
+  /** The auto-probe's inputs as aggregates for `Dataset.observe`, so
+    * the job that materializes a batch computes them too: the row count
+    * and the hot shard's row count. The hot count comes from a
+    * frequent-items sketch over the shard keys (as xxhash64, so a NULL
+    * shard is its own key, as groupBy treats it): exact while the batch
+    * holds fewer than [[SkewProbeTracked]] distinct shards, and beyond
+    * that off by a small bounded fraction of the batch, which can only
+    * mis-route the pack near the crossover (outputs are bit-identical on
+    * either route). Each task ships O(min(shards, SkewProbeTracked))
+    * state to the driver, never O(batch). */
+  private[graft] def skewProbeMetrics(shardCol: String): Seq[Column] = Seq(
+    count(lit(1)).as("__t"),
+    call_function("approx_top_k", xxhash64(col(shardCol)), lit(1),
+      lit(SkewProbeTracked)).as("__hot"))
+
+  /** See [[skewProbeMetrics]]. */
+  private[graft] val SkewProbeTracked = 10000
+
+  /** The auto-probe's decision from observed [[skewProbeMetrics]] —
+    * zero jobs of its own. */
+  private[graft] def packSkewProbe(observed: Map[String, Any]): Boolean = {
+    val hot = observed("__hot").asInstanceOf[Seq[Row]].headOption
+      .fold(0L)(_.getLong(1))
+    autoPackSkew(hotRows = hot,
+      totalRows = observed("__t").asInstanceOf[Long])
+  }
 
   /** Run-scoped telemetry of the pack-route decision ([[autoPackSkew]])
     * per non-empty trigger: which triggers the auto-probe (or an
@@ -640,21 +667,16 @@ object RefreshPipeline {
       idCol, n = decontamN, minMatches = minMatches)
     val dropIds = nearHits.select(col("__bid").as("__xid"))
       .unionByName(contamIds.select(col("__mid").as("__xid")))
-    // the skew probe's inputs (total rows + per-shard counts of the
-    // accepted set) ride the tiers checkpoint as observed metrics —
-    // shard keys as xxhash64 (null-safe: a NULL shard hashes to the
-    // seed, so it counts as its own group exactly as groupBy treats
-    // it) — replacing the probe's own aggregation job per trigger.
-    // Collision risk only ever mis-ROUTES the pack strategy (outputs
-    // are bit-identical either way, the spec-pinned property).
+    // the skew probe's inputs ride the tiers checkpoint as observed
+    // metrics, so the probe launches no job (see [[skewProbeMetrics]])
     val obTiers = org.apache.spark.sql.Observation(s"skew-b$batchId")
     val cleaned = staged("tiers") {
       val joined = exactKept
         .join(dropIds, col(idCol) === col("__xid"), "left_anti")
+      val probe = skewProbeMetrics(shardCol)
       val observed =
         if (packSkew.isEmpty)
-          joined.observe(obTiers, count(lit(1)).as("__t"),
-            collect_list(xxhash64(col(shardCol))).as("__sh"))
+          joined.observe(obTiers, probe.head, probe.tail: _*)
         else joined
       val ck = observed.localCheckpoint(true)
       // debug-only plan evidence (GRAFT_RP_PLANS=<dir>): the executed
@@ -683,27 +705,15 @@ object RefreshPipeline {
       val tokenized = cleaned.withColumn("__ids",
         Bpe.byteTokenIds(col(textCol), BpeByteVocab.merges))
       // the skew-robust pack decision, made WHERE the batch is already
-      // materialized: an explicit packSkew wins; otherwise one narrow
-      // two-level aggregation over the checkpointed batch (count per
-      // shard -> max/total, one bounded-collect row) routes a trigger
+      // materialized: an explicit packSkew wins; otherwise the probe,
+      // from the tiers checkpoint's observed metrics, routes a trigger
       // whose accepted docs concentrate in one shard (the Zipfian
       // crawl-drop shape) through packTokenIdsSkewRobust — the 6.5x
       // mitigation SKEW_SCALE measured, applied by the flagship chain
       // automatically (gated by the measured crossover, see
       // autoPackSkew)
       val skewRobust = packSkew.getOrElse { staged("skewprobe") {
-        // max/total reduced on the driver from the metrics the tiers
-        // checkpoint already observed — zero jobs (was one aggregation
-        // shuffle + collect per trigger)
-        val m = obTiers.get
-        val total = m("__t").asInstanceOf[Long]
-        val hashes = m("__sh").asInstanceOf[Seq[_]]
-          .map(_.asInstanceOf[Long])
-        val hot =
-          if (hashes.isEmpty) 0L
-          else hashes.groupBy(identity).valuesIterator
-            .map(_.size.toLong).max
-        autoPackSkew(hotRows = hot, totalRows = total)
+        packSkewProbe(obTiers.get)
       } }
       routeLog.foreach(_.record(batchId, skewRobust))
       def shardAppend(): Unit = staged("shard") { shardRoot match {

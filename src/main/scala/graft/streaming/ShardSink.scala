@@ -91,118 +91,21 @@ object ShardSink {
   private def versions(storeDir: String): Seq[(Long, java.io.File)] =
     StoreFiles.publishedDirs(storeDir, "v", StoreFiles.hasParquet)
 
+  /** The store's tier layout ([[TierRuns]]): runs `u<id>`/`t<id>` live
+    * beside the version dirs `v<n>`, the tier-0 arms. A run holds the
+    * latest-wins view of its range with each row's original version
+    * kept physical as `__v`. */
+  private[graft] def layout(storeDir: String): TierRuns.Layout =
+    TierRuns.Layout(storeDir, new java.io.File(storeDir), () =>
+      versions(storeDir).map { case (v, f) => TierRuns.Arm(v, s"v$v", f) })
+
   /** Committed version count — [[StoreRoot]]'s anything-to-fold check
     * (a store holding at most its base has no compaction debt). Counts
     * LIVE units: tier runs collapse the versions they cover into one
     * unit each, so a tier-compacted store reports the merged-read
     * amplification that actually remains, not the history length. */
   private[graft] def versionCount(storeDir: String): Int =
-    liveUnits(storeDir).size
-
-  // ---- size-tiered (LSM) runs ----
-  //
-  // A tier RUN is the latest-wins view of a CONTIGUOUS range of the
-  // store's units, resolved physically and stored as one directory
-  // `t<runId>` beside the version dirs, with each surviving row's
-  // ORIGINAL version materialized as a `__v` column — so the global
-  // merged read stays exactly the same latest-wins resolution, just
-  // over fewer, larger units. Runs nest: K tier-0 versions fold into a
-  // tier-1 run, K tier-1 runs into a tier-2 run, and so on — per-fold
-  // work is O(one tier), never O(current store) (the generation fold's
-  // cost model), which is what keeps compaction cycles flat as the
-  // store grows without bound.
-  //
-  // Commit protocol (the [[StoreRoot]] begin/finish crash windows,
-  // reproduced inside a generation): the fold stages its run and
-  // publishes it as `u<runId>` — COMMITTED but UNREFERENCED (readers
-  // only ever scan `t` runs), the marker-committed-before-swap state; a
-  // single atomic same-dir rename `u<id>` -> `t<id>` is the SWAP
-  // (readers flip from the covered sources to the run between two
-  // listings, both views latest-wins-identical); the covered source
-  // dirs are then retired (swept). A crash mid-fold leaves only
-  // staging (swept on the next begin); after publish-before-swap
-  // leaves a `u` run the next begin ADOPTS (swap + retire — never a
-  // redo); after swap-before-retire leaves covered-but-present sources
-  // the structural liveness rule below already excludes from every
-  // read, swept by the next begin.
-
-  /** One live unit of the store: a delta version (`tier` 0, `lo` ==
-    * `hi` == version) or a referenced tier run (marker layout:
-    * [[StoreFiles.TierRunMarker]]). */
-  private[graft] final case class TierUnit(tier: Int, lo: Long,
-                                           hi: Long, dir: java.io.File)
-
-  private def hasRunMarker(d: java.io.File): Boolean =
-    new java.io.File(d, StoreFiles.TierRunMarker).isFile
-
-  private def runUnits(storeDir: String,
-                       prefix: String): Seq[TierUnit] =
-    StoreFiles.publishedDirs(storeDir, prefix, hasRunMarker)
-      .flatMap { case (_, d) =>
-        StoreFiles.runMeta(d)
-          .map { case (t, lo, hi) => TierUnit(t, lo, hi, d) }
-      }
-
-  /** Committed-but-UNREFERENCED runs (`u<id>`) — the fold-committed
-    * pre-swap state [[StoreRoot]]'s tiered begin adopts. */
-  private[graft] def pendingRuns(storeDir: String): Seq[TierUnit] =
-    runUnits(storeDir, "u")
-
-  /** Highest existing run id across referenced and pending runs — the
-    * next fold publishes at id + 1 (ids never reused, so an abandoned
-    * staging dir can never alias a later cycle's commit). */
-  private[streaming] def maxRunId(storeDir: String): Long =
-    (StoreFiles.publishedDirs(storeDir, "t", hasRunMarker) ++
-      StoreFiles.publishedDirs(storeDir, "u", hasRunMarker))
-      .map(_._1).maxOption.getOrElse(-1L)
-
-  /** The store's LIVE units, ascending by range: referenced runs not
-    * nested inside a strictly larger referenced run, plus delta
-    * versions not covered by any such run. Structural — derived from
-    * one directory listing, no separate manifest — so a reader that
-    * lists before a run's swap serves the covered sources and one that
-    * lists after serves the run: latest-wins-identical views, which is
-    * what makes the swap rename the commit point. Covered dirs still
-    * on disk (the swap-before-retire crash window) are simply never
-    * scanned. */
-  private[graft] def liveUnits(storeDir: String): Seq[TierUnit] = {
-    val runs = runUnits(storeDir, "t")
-    // ranges of distinct runs are nested or disjoint by construction
-    // (a fold always takes whole adjacent units), so "strictly larger
-    // containing range" is exactly "a later fold absorbed this run"
-    val live = runs.filter(r => !runs.exists(o =>
-      o.lo <= r.lo && r.hi <= o.hi && (o.hi - o.lo) > (r.hi - r.lo)))
-    val vs = versions(storeDir)
-      .filter { case (v, _) => !live.exists(r => r.lo <= v && v <= r.hi) }
-      .map { case (v, f) => TierUnit(0, v, v, f) }
-    (live ++ vs).sortBy(u => (u.lo, -u.hi))
-  }
-
-  /** The TIERED retention floor: the highest version any referenced
-    * run covers. Versions inside a run's range were resolved
-    * physically — an asOf at or below the floor cannot be served
-    * (superseded rows below it are gone) and fails loudly, the same
-    * contract as [[StoreRoot.floor]]'s generation floor. None when the
-    * store has no runs. */
-  private[graft] def tieredFloor(storeDir: String): Option[Long] =
-    runUnits(storeDir, "t").map(_.hi).maxOption
-
-  /** The size-tiered fold plan: the OLDEST window of `fanout`
-    * consecutive live units sharing one tier, never touching the
-    * newest `keep` units (the trailing asOf window, [[compact]]'s
-    * `keepVersions` contract). Folding oldest-first keeps unit ranges
-    * nested-or-disjoint by construction and escalates naturally: K
-    * deltas fold to a tier-1 run, K adjacent tier-1 runs to tier-2,
-    * and the top tier only ever rewrites when it fills — per-cycle
-    * work O(one tier). None when no tier is full. */
-  private[graft] def tierPlan(storeDir: String, fanout: Int,
-                              keep: Int): Option[Seq[TierUnit]] = {
-    require(fanout >= 2, s"tier fanout must be >= 2: $fanout")
-    val units = liveUnits(storeDir).dropRight(keep)
-    (0 to units.length - fanout).view
-      .map(i => units.slice(i, i + fanout))
-      .find(w => w.forall(_.tier == w.head.tier))
-  }
+    TierRuns.liveUnits(layout(storeDir)).size
 
   /** Write the tier run folding `units` into `staging`: the latest-wins
     * view RESTRICTED to those units with the per-row `__v` kept
@@ -211,7 +114,7 @@ object ShardSink {
     * is unchanged), plus the range marker. Reads O(units), never the
     * rest of the store. */
   private[streaming] def writeTierRun(spark: SparkSession,
-      units: Seq[TierUnit], tier: Int, staging: String,
+      units: Seq[TierRuns.TierUnit], tier: Int, staging: String,
       shardCol: String): Unit = {
     val all = scanUnits(spark,
       units.filter(_.tier > 0), units.filter(_.tier == 0))
@@ -231,55 +134,6 @@ object ShardSink {
       Seq(s"tier=$tier", s"lo=${units.head.lo}", s"hi=${units.last.hi}"))
   }
 
-  /** Retire every dir a referenced run covers — the tier machine's
-    * retire verb AND its swap-before-retire heal (idempotent: covered
-    * dirs are invisible to reads either way, this just reclaims
-    * them). Also sweeps any abandoned fold staging (no fold is in
-    * flight when this runs — the per-root single-writer contract). */
-  private[streaming] def sweepCovered(storeDir: String): Unit = {
-    val live = liveUnits(storeDir).map(_.dir.getName).toSet
-    val runs = runUnits(storeDir, "t")
-      .filter(r => live.contains(r.dir.getName))
-    def covered(lo: Long, hi: Long): Boolean =
-      runs.exists(r => r.lo <= lo && hi <= r.hi &&
-        (r.hi - r.lo) > (hi - lo))
-    versions(storeDir).foreach { case (v, f) =>
-      if (covered(v, v)) StoreFiles.deleteRec(f)
-    }
-    runUnits(storeDir, "t").foreach { r =>
-      if (covered(r.lo, r.hi)) StoreFiles.deleteRec(r.dir)
-    }
-    Option(new java.io.File(storeDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(".staging-u"))
-      .foreach(StoreFiles.deleteRec)
-  }
-
-  /** Post-kill disk forensics for the tiered machine (the
-    * [[graft.tools.CrashHarness]] classifier): `pre-swap` = a fold's
-    * staging or committed-unreferenced `u` run is on disk;
-    * `swap-no-retire` = a referenced run's covered sources are still
-    * present; else `none`. */
-  private[graft] def tieredWindow(storeDir: String): String = {
-    val pre = pendingRuns(storeDir).nonEmpty ||
-      Option(new java.io.File(storeDir).listFiles())
-        .getOrElse(Array.empty)
-        .exists(f => f.isDirectory && f.getName.startsWith(".staging-u"))
-    if (pre) "pre-swap"
-    else {
-      val live = liveUnits(storeDir).map(_.dir.getName).toSet
-      val runs = runUnits(storeDir, "t")
-        .filter(r => live.contains(r.dir.getName))
-      def covered(lo: Long, hi: Long): Boolean =
-        runs.exists(r => r.lo <= lo && hi <= r.hi &&
-          (r.hi - r.lo) > (hi - lo))
-      val unretired =
-        versions(storeDir).exists { case (v, _) => covered(v, v) } ||
-          runUnits(storeDir, "t").exists(r => covered(r.lo, r.hi))
-      if (unretired) "swap-no-retire" else "none"
-    }
-  }
-
   /** Append one batch of documents (with a pre-tokenized `idsCol`) to
     * the store: read the merged view, compute the delta via
     * packTokenIdsIncremental, stage it, publish atomically. `version`
@@ -297,11 +151,10 @@ object ShardSink {
     // run (its dir is retired, so publishOnce alone would NOT skip it)
     // — the same at-least-once re-delivery skip a managed root applies
     // at its generation floor
-    if (version.exists(v => tieredFloor(storeDir).exists(v <= _)))
-      return false
+    val tierFloor = TierRuns.floor(layout(storeDir))
+    if (version.exists(v => tierFloor.exists(v <= _))) return false
     val vs = versions(storeDir)
-    val latestCommitted =
-      (vs.lastOption.map(_._1) ++ tieredFloor(storeDir)).maxOption
+    val latestCommitted = (vs.lastOption.map(_._1) ++ tierFloor).maxOption
     // an explicit version BELOW the latest committed one (the scaladoc's
     // warned-against mix of a restarted streaming checkpoint with the
     // scheduler path) would compute its delta against a merged view
@@ -336,7 +189,7 @@ object ShardSink {
           case Some(c) => (c.schema, c.tails)
           case None =>
             val existing =
-              if (liveUnits(storeDir).nonEmpty)
+              if (versionCount(storeDir) > 0)
                 read(spark, storeDir, shardCol)
               // first batch: an empty frame with the exact store schema
               else Curate.packTokenIds(batch.limit(0), idsCol, idCol,
@@ -480,17 +333,11 @@ object ShardSink {
   private def versioned(spark: SparkSession, storeDir: String,
                         asOf: Option[Long]): DataFrame = {
     StoreFiles.requireNotRetired(storeDir, "shard store")
-    val units = liveUnits(storeDir)
-    // asOf below the tiered floor cannot be served: rows a run's range
-    // resolved away exist nowhere (same loud-failure contract as the
-    // generation floor). At or above it, every run is fully included
-    // (hi <= floor <= asOf) and delta dirs filter at the path level.
-    for (v <- asOf; f <- units.filter(_.tier > 0).map(_.hi).maxOption)
-      if (v < f) throw new IllegalStateException(
-        s"shard store at $storeDir: asOf=$v is below the tiered " +
-          s"retention floor $f - versions inside a tier run's range " +
-          "were resolved physically by compaction; history below the " +
-          "floor is beyond retention")
+    val units = TierRuns.liveUnits(layout(storeDir))
+    // at or above the tiered floor every run is fully included and
+    // delta dirs filter at the path level
+    TierRuns.requireAsOf("shard store", storeDir, asOf,
+      units.filter(_.tier > 0).map(_.hi).maxOption)
     val keep = asOf.fold(units)(v => units.filter(_.lo <= v))
     if (keep.isEmpty) throw new IllegalStateException(
       s"no shard store versions under $storeDir" +
@@ -515,18 +362,18 @@ object ShardSink {
     * raises instead — codegen'd branch, no measurable scan cost);
     * tier runs carry `__v` physically, so the union is two scan nodes
     * regardless of unit count. */
-  private def scanUnits(spark: SparkSession, runs: Seq[TierUnit],
-                        deltas: Seq[TierUnit]): DataFrame = {
+  private def scanUnits(spark: SparkSession, runs: Seq[TierRuns.TierUnit],
+                        deltas: Seq[TierRuns.TierUnit]): DataFrame = {
     require(runs.nonEmpty || deltas.nonEmpty, "no units to scan")
     val newest = (runs ++ deltas).maxBy(_.hi)
     val latestSchema = org.apache.spark.sql.types.StructType(
-      spark.read.parquet(newest.dir.getAbsolutePath)
+      spark.read.parquet(newest.dirs.head.getAbsolutePath)
         .schema.filterNot(_.name == "__v"))
     val deltaScan =
       if (deltas.isEmpty) None
       else {
         val raw = spark.read.schema(latestSchema)
-          .parquet(deltas.map(_.dir.getAbsolutePath): _*)
+          .parquet(deltas.flatMap(_.dirs).map(_.getAbsolutePath): _*)
           .withColumn("__v", substring(element_at(
             split(input_file_name(), "/"), -2), 2, 18).cast("long"))
         Some(raw.withColumn("__v",
@@ -540,7 +387,7 @@ object ShardSink {
       else Some(spark.read
         .schema(latestSchema.add("__v",
           org.apache.spark.sql.types.LongType))
-        .parquet(runs.map(_.dir.getAbsolutePath): _*))
+        .parquet(runs.flatMap(_.dirs).map(_.getAbsolutePath): _*))
     (deltaScan, runScan) match {
       case (Some(d), Some(r)) => d.unionByName(r)
       case (Some(d), None) => d
@@ -630,7 +477,8 @@ object ShardSink {
     * is running the fold OFF the drain's critical path —
     * [[StoreRoot.beginCompactShard]] folds in the background over the
     * immutable committed versions while appends keep landing, and only
-    * the O(late-deltas) [[topUp]] + swap + retire runs inline. */
+    * the O(late-deltas) [[TierRuns.topUp]] + swap + retire runs
+    * inline. */
   def compact(spark: SparkSession, storeDir: String, outDir: String,
               shardCol: String = "source",
               keepVersions: Int = 0): Unit = {
@@ -645,9 +493,10 @@ object ShardSink {
     require(versions(outDir).isEmpty,
       s"compaction target $outDir already holds store versions - " +
         "compact into a fresh directory")
+    val l = layout(storeDir)
     val vs = versions(storeDir)
-    val maxCovered = (vs.lastOption.map(_._1) ++ tieredFloor(storeDir))
-      .maxOption.getOrElse(throw new IllegalStateException(
+    val maxCovered = TierRuns.latestCovered(l).getOrElse(
+      throw new IllegalStateException(
         s"no shard store versions under $storeDir"))
     // windowed retention: fold versions at or below the cutoff into
     // the fresh base, carry the newest `keepVersions` delta dirs over
@@ -661,62 +510,17 @@ object ShardSink {
     val rawCutoff =
       if (vs.isEmpty) maxCovered
       else vs(math.max(0, vs.length - 1 - keepVersions))._1
-    val cutoff = (Seq(rawCutoff) ++ tieredFloor(storeDir)).max
+    val cutoff = (Seq(rawCutoff) ++ TierRuns.floor(l)).max
     new java.io.File(outDir).mkdirs()
     StoreFiles.publishOnce(s"$outDir/.staging-v0",
       new java.io.File(s"$outDir/v0"), { staging =>
         read(spark, storeDir, shardCol, asOf = Some(cutoff))
           .write.mode("overwrite").parquet(staging)
       })
-    vs.filter(_._1 > cutoff).foreach { case (n, f) =>
-      StoreFiles.publishOnce(s"$outDir/.staging-v$n",
-        new java.io.File(s"$outDir/v$n"),
-        staging => StoreFiles.copyRec(f, new java.io.File(staging)))
-    }
+    TierRuns.copyArmsAbove(l, outDir, cutoff)
     // lineage marker AFTER the fold commits — [[retire]]'s precondition
     StoreFiles.writeCompactedFrom(outDir, storeDir, maxCovered,
       floor = Some(cutoff))
-  }
-
-  /** TOP-UP a committed compaction target with the delta versions its
-    * source grew AFTER the fold was cut — the O(late-deltas) completion
-    * step that lets the fold itself run out-of-band while appends keep
-    * landing in the source ([[StoreRoot]]'s begin/finish split), and
-    * equally the RESUME step for a fold that committed but crashed
-    * before its swap. Late version dirs are copied VERBATIM (same
-    * keys, staged + published, so re-delivered appends still find
-    * their commits and a re-run top-up skips already-copied versions),
-    * then the lineage marker's `max` advances atomically while `floor`
-    * stays at the original fold cutoff — the copied versions remain
-    * individually addressable by asOf, exactly like windowed
-    * retention's carried deltas. No-op when the target already covers
-    * the source. */
-  private[graft] def topUp(storeDir: String, outDir: String): Unit = {
-    val m = StoreFiles.readMarker(
-        new java.io.File(outDir, StoreFiles.CompactedFromMarker))
-      .getOrElse(throw new IllegalStateException(
-        s"top-up target $outDir carries no committed fold marker - " +
-          "nothing to top up (a partial fold is swept and redone, " +
-          "never topped up)"))
-    val max = m("max").toLong
-    // tier folds and generation folds on one store must be serialized
-    // by the caller (runManaged's one-in-flight queue does): a run
-    // committed between this generation fold's cut and its top-up
-    // would cover versions the top-up copies verbatim — fail loudly
-    // rather than double-serve them
-    require(!tieredFloor(storeDir).exists(_ > max),
-      s"top-up source $storeDir grew a tier run past the generation " +
-        s"fold's cut v$max - tier and generation folds must not " +
-        "interleave on one store")
-    val late = versions(storeDir).filter(_._1 > max)
-    if (late.isEmpty) return
-    late.foreach { case (n, f) =>
-      StoreFiles.publishOnce(s"$outDir/.staging-v$n",
-        new java.io.File(s"$outDir/v$n"),
-        staging => StoreFiles.copyRec(f, new java.io.File(staging)))
-    }
-    StoreFiles.writeCompactedFrom(outDir, storeDir, late.last._1,
-      floor = Some(m.getOrElse("floor", m("max")).toLong))
   }
 
   /** Retention: delete a PRE-COMPACTION store after its readers have
@@ -732,9 +536,6 @@ object ShardSink {
     * outlives it, so a late reader — including any `asOf`, which is now
     * below the retention floor — fails loudly naming the successor,
     * never sees a partial or empty store. */
-  def retire(storeDir: String, compactedTo: String): Unit = {
-    StoreFiles.beginRetire(storeDir, compactedTo,
-      (versions(storeDir).map(_._1) ++ tieredFloor(storeDir)).maxOption)
-    StoreFiles.deletePayload(storeDir)
-  }
+  def retire(storeDir: String, compactedTo: String): Unit =
+    TierRuns.retire(layout(storeDir), compactedTo)
 }

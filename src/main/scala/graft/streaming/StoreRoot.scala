@@ -98,9 +98,15 @@ object StoreRoot {
     val genFloor = StoreFiles.readMarker(new java.io.File(dir,
         StoreFiles.CompactedFromMarker))
       .map(mk => mk.getOrElse("floor", mk("max")).toLong)
-    (genFloor.toSeq ++ ShardSink.tieredFloor(dir) ++
-      VectorIndexSink.tieredFloor(dir)).maxOption
+    (genFloor.toSeq ++ TierRuns.floor(layoutOf(dir))).maxOption
   }
+
+  /** The tier layout of a store dir, read off its contents: a vector
+    * index carries its base `encoded` table, a shard store never does. */
+  private[graft] def layoutOf(dir: String): TierRuns.Layout =
+    if (new java.io.File(dir, "encoded").isDirectory)
+      VectorIndexSink.layout(dir)
+    else ShardSink.layout(dir)
 
   /** The manifest swap — [[StoreFiles.writeMarker]]'s temp-file write
     * plus ONE atomic same-dir rename, so a reader sees the old pointer
@@ -240,31 +246,36 @@ object StoreRoot {
 
   // ---- the shared compact-swap-retire state machine ----
 
-  /** The per-store verbs the generic machine composes: shard stores
-    * and vector indexes differ only in these. `topUp` and `retire` are
+  /** What a store adds to the shared machines: the debt check and the
+    * generation fold, its tier layout (which the shared top-up, retire
+    * and tier bookkeeping of [[TierRuns]] work over), and the writer
+    * that stages one tier run's payload (content + range marker) for
+    * the given units at the given tier. The top-up and the retire are
     * pure filesystem verbs — [[finishCompact]] needs no session. */
   private final case class StoreVerbs(
       spark: SparkSession,
       hasDebt: String => Boolean,
       fold: (SparkSession, String, String) => Unit,
-      topUp: (String, String) => Unit,
-      retire: (String, String) => Unit)
+      layout: String => TierRuns.Layout,
+      writeRun: (SparkSession, Seq[TierRuns.TierUnit], Int, String) => Unit)
 
   private def shardVerbs(spark: SparkSession, shardCol: String,
                          keep: Int): StoreVerbs = StoreVerbs(
     spark,
     hasDebt = d => ShardSink.versionCount(d) > keep + 1,
     fold = (sp, c, n) => ShardSink.compact(sp, c, n, shardCol, keep),
-    topUp = (c, n) => ShardSink.topUp(c, n),
-    retire = (c, n) => ShardSink.retire(c, n))
+    layout = ShardSink.layout,
+    writeRun = (sp, units, tier, staging) =>
+      ShardSink.writeTierRun(sp, units, tier, staging, shardCol))
 
   private def vectorVerbs(spark: SparkSession, keep: Int,
                           idCol: String): StoreVerbs = StoreVerbs(
     spark,
     hasDebt = d => VectorIndexSink.batchCount(d) > keep,
     fold = (sp, c, n) => VectorIndexSink.compact(sp, c, n, keep, idCol),
-    topUp = (c, n) => VectorIndexSink.topUp(c, n),
-    retire = (c, n) => VectorIndexSink.retire(c, n))
+    layout = VectorIndexSink.layout,
+    writeRun = (sp, units, tier, staging) =>
+      VectorIndexSink.writeTierRun(sp, units, tier, staging, idCol))
 
   /** Task-parallelism cap for BACKGROUND folds. A background fold at
     * the session's full width measurably starves the drain it is
@@ -425,7 +436,7 @@ object StoreRoot {
     val prev = genDir(root, g - 1)
     if (g > 0 && prev.isDirectory
         && StoreFiles.retiredTo(prev.getAbsolutePath).isEmpty)
-      v.retire(prev.getAbsolutePath, cur.getAbsolutePath)
+      TierRuns.retire(v.layout(prev.getAbsolutePath), cur.getAbsolutePath)
     if (!v.hasDebt(cur.getAbsolutePath)) return None
     val next = genDir(root, g + 1)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
@@ -445,37 +456,46 @@ object StoreRoot {
       if (next.exists()) StoreFiles.deleteRec(next)
       v.fold(sp, cur.getAbsolutePath, next.getAbsolutePath)
     }
-    if (!background) {
-      runFold(v.spark)
-      Some(new Fold(root, g, None, err, v.spark, foldJobGroup(root, g),
-        Some(v), None, tier = -1))
-    } else {
-      val t = new Thread(
-        () => try {
-          // isolate the fold's jobs from the drain's (see
-          // [[FoldSchedulerPool]]); thread-local, so only this fold's
-          // job submissions are affected
-          v.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", FoldSchedulerPool)
-          // per-fold job group with interruptOnCancel so abandon() can
-          // stop the RUNNING tasks, not just this submitting thread
-          v.spark.sparkContext.setJobGroup(foldJobGroup(root, g),
-            s"graft out-of-band compaction fold: $root gen$g",
-            interruptOnCancel = true)
-          runFold(throttledClone(v.spark))
-        } catch { case e: Throwable => err.set(e) },
-        s"graft-fold-${new java.io.File(root).getName}-gen$g")
-      t.setDaemon(true)
-      t.start()
-      Some(new Fold(root, g, Some(t), err, v.spark,
-        foldJobGroup(root, g), Some(v), None, tier = -1))
-    }
+    val t =
+      if (!background) { runFold(v.spark); None }
+      else Some(foldThread(v.spark, foldJobGroup(root, g),
+        s"graft out-of-band compaction fold: $root gen$g",
+        s"graft-fold-${new java.io.File(root).getName}-gen$g", err)(
+        runFold))
+    Some(new Fold(root, g, t, err, v.spark, foldJobGroup(root, g),
+      Some(v), None, tier = -1))
+  }
+
+  /** Start `fold` on a daemon thread over a [[throttledClone]] of
+    * `spark`; a failure lands in `err` for [[finishCompact]] to
+    * rethrow. */
+  private def foldThread(spark: SparkSession, group: String,
+      desc: String, name: String,
+      err: java.util.concurrent.atomic.AtomicReference[Throwable])(
+      fold: SparkSession => Unit): Thread = {
+    val t = new Thread(
+      () => try {
+        // isolate the fold's jobs from the drain's (see
+        // [[FoldSchedulerPool]]); thread-local, so only this fold's
+        // job submissions are affected
+        spark.sparkContext.setLocalProperty(
+          "spark.scheduler.pool", FoldSchedulerPool)
+        // per-fold job group with interruptOnCancel so abandon() can
+        // stop the RUNNING tasks, not just this submitting thread
+        spark.sparkContext.setJobGroup(group, desc,
+          interruptOnCancel = true)
+        fold(throttledClone(spark))
+      } catch { case e: Throwable => err.set(e) },
+      name)
+    t.setDaemon(true)
+    t.start()
+    t
   }
 
   /** Complete a begun compaction cycle: wait for the fold to commit
     * (a failed background fold rethrows here), TOP-UP the delta
     * versions appended since the fold was cut (O(late-deltas) verbatim
-    * copies — see [[ShardSink.topUp]]), swap the manifest (the commit
+    * copies — see [[TierRuns.topUp]]), swap the manifest (the commit
     * point), retire the predecessor. Runs on the caller's thread at a
     * quiescent point — the drain's trigger boundary — so no append
     * races the swap. */
@@ -490,34 +510,25 @@ object StoreRoot {
           s"generation fold for ${f.root} carries no store verbs"))
         val cur = genDir(f.root, f.gen)
         val next = genDir(f.root, f.gen + 1)
-        v.topUp(cur.getAbsolutePath, next.getAbsolutePath)
+        TierRuns.topUp(v.layout(cur.getAbsolutePath),
+          next.getAbsolutePath)
         writeManifest(f.root, f.gen + 1) // the commit point - readers swap
-        // test-only hook: the crash harness widens the swap->retire gap
-        // so its poll can land a SIGKILL inside the swap-no-retire
-        // window (at real scale the gap is sub-ms; the heal path is the
-        // same either way - begin() retires the unretired predecessor)
-        sys.props.get("graft.test.retireDelayMs").map(_.toLong)
-          .filter(_ > 0).foreach(Thread.sleep)
-        v.retire(cur.getAbsolutePath, next.getAbsolutePath)
+        retireDelay()
+        TierRuns.retire(v.layout(cur.getAbsolutePath),
+          next.getAbsolutePath)
     }
   }
 
-  // ---- size-tiered (LSM) folds inside the current generation ----
+  /** Test-only hook: the crash harness widens the swap->retire gap (of
+    * both machines) so its poll can land a SIGKILL inside the
+    * swap-no-retire window. At real scale the gap is sub-ms; the heal
+    * path is the same either way — the next begin retires what the
+    * swap left. */
+  private def retireDelay(): Unit =
+    sys.props.get("graft.test.retireDelayMs").map(_.toLong)
+      .filter(_ > 0).foreach(Thread.sleep)
 
-  /** The per-store primitives the generic tier machine composes —
-    * [[ShardSink]] and [[VectorIndexSink]] differ only in these.
-    * `plan` returns the next fold (tier of the RESULTING run, covered
-    * range, and a writer that stages the run's content + range
-    * marker); `sweep` retires every source a referenced run covers
-    * (idempotent — also the swap-no-retire heal); `runsParent` is
-    * where `u`/`t` run dirs live. */
-  private final case class TierOps(
-      spark: SparkSession,
-      plan: String => Option[(Int, Long, Long,
-        (SparkSession, String) => Unit)],
-      maxRunId: String => Long,
-      sweep: String => Unit,
-      runsParent: String => java.io.File)
+  // ---- size-tiered (LSM) folds inside the current generation ----
 
   /** Start (or run inline) one SIZE-TIERED compaction cycle on the
     * current generation: heal any crashed predecessor cycle (adopt a
@@ -536,27 +547,20 @@ object StoreRoot {
     * Single-writer per root, and tier cycles must not interleave with
     * generation folds on the same root (callers serialize — runManaged
     * runs one fold at a time across all roots). */
-  private def beginTier(root: String, ops: TierOps,
-                        background: Boolean): Option[Fold] = {
-    val dir = currentDir(root)
-    val parent = ops.runsParent(dir)
+  private def beginTier(root: String, v: StoreVerbs, fanout: Int,
+                        keep: Int, background: Boolean): Option[Fold] = {
+    val l = v.layout(currentDir(root))
     // HEAL, in commit order: a committed-unreferenced run is ADOPTED
     // (rename = the swap it never got; its sources are still intact
     // because retire strictly follows the swap), then covered sources
     // and stale staging are swept
-    Option(parent.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("u\\d+")
-        && new java.io.File(f, StoreFiles.TierRunMarker).isFile)
-      .foreach { u =>
-        java.nio.file.Files.move(u.toPath,
-          new java.io.File(parent, "t" + u.getName.drop(1)).toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    ops.sweep(dir)
-    ops.plan(dir).map { case (tier, lo, hi, write) =>
-      val runId = ops.maxRunId(dir) + 1
+    TierRuns.pendingRuns(l).flatMap(_.run).foreach(TierRuns.swap)
+    TierRuns.sweepCovered(l)
+    TierRuns.plan(l, fanout, keep).map { units =>
+      val tier = units.head.tier + 1
+      val runId = TierRuns.nextRunId(l)
+      val parent = l.runsParent
       val u = new java.io.File(parent, s"u$runId")
-      val t = new java.io.File(parent, s"t$runId")
       val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
       val group = s"graft-tier-fold-${new java.io.File(root).getName}" +
         s"-r$runId"
@@ -564,56 +568,27 @@ object StoreRoot {
         parent.mkdirs()
         StoreFiles.publishOnce(
           s"${parent.getAbsolutePath}/.staging-u$runId", u,
-          staging => write(sp, staging))
+          staging => v.writeRun(sp, units, tier, staging))
         ()
       }
       val fin: () => Unit = () => {
-        // the SWAP: one atomic same-dir rename references the run —
-        // a reader's listing sees covered sources or the run, and the
-        // two views are latest-wins-identical by construction
-        java.nio.file.Files.move(u.toPath, t.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        // test-only hook (same as the generation machine's): widen the
-        // swap->retire gap so the crash harness can land inside it
-        sys.props.get("graft.test.retireDelayMs").map(_.toLong)
-          .filter(_ > 0).foreach(Thread.sleep)
-        ops.sweep(dir) // the retire: covered sources reclaimed
+        // the SWAP: a reader's listing sees covered sources or the run,
+        // and the two views are latest-wins-identical by construction
+        TierRuns.swap(u)
+        retireDelay()
+        TierRuns.sweepCovered(l) // the retire: covered sources reclaimed
       }
-      if (!background) {
-        runFold(ops.spark)
-        new Fold(root, currentGen(root), None, err, ops.spark, group,
-          None, Some(fin), tier)
-      } else {
-        val th = new Thread(
-          () => try {
-            ops.spark.sparkContext.setLocalProperty(
-              "spark.scheduler.pool", FoldSchedulerPool)
-            ops.spark.sparkContext.setJobGroup(group,
-              s"graft tier-$tier compaction fold: $root v$lo..v$hi",
-              interruptOnCancel = true)
-            runFold(throttledClone(ops.spark))
-          } catch { case e: Throwable => err.set(e) },
-          s"graft-tierfold-${new java.io.File(root).getName}-r$runId")
-        th.setDaemon(true)
-        th.start()
-        new Fold(root, currentGen(root), Some(th), err, ops.spark,
-          group, None, Some(fin), tier)
-      }
+      val th =
+        if (!background) { runFold(v.spark); None }
+        else Some(foldThread(v.spark, group,
+          s"graft tier-$tier compaction fold: $root " +
+            s"v${units.head.lo}..v${units.last.hi}",
+          s"graft-tierfold-${new java.io.File(root).getName}-r$runId",
+          err)(runFold))
+      new Fold(root, currentGen(root), th, err, v.spark, group,
+        None, Some(fin), tier)
     }
   }
-
-  private def shardTierOps(spark: SparkSession, shardCol: String,
-                           fanout: Int, keep: Int): TierOps = TierOps(
-    spark,
-    plan = dir => ShardSink.tierPlan(dir, fanout, keep).map { units =>
-      (units.head.tier + 1, units.head.lo, units.last.hi,
-        (sp: SparkSession, staging: String) =>
-          ShardSink.writeTierRun(sp, units, units.head.tier + 1,
-            staging, shardCol))
-    },
-    maxRunId = ShardSink.maxRunId,
-    sweep = ShardSink.sweepCovered,
-    runsParent = dir => new java.io.File(dir))
 
   /** Start an out-of-band SIZE-TIERED shard compaction cycle (see
     * [[beginTier]]): fold the oldest `fanout` same-tier units of the
@@ -628,7 +603,7 @@ object StoreRoot {
                               shardCol: String = "source",
                               fanout: Int = 4,
                               keep: Int = 0): Option[Fold] =
-    beginTier(root, shardTierOps(spark, shardCol, fanout, keep),
+    beginTier(root, shardVerbs(spark, shardCol, keep), fanout, keep,
       background = true)
 
   /** Synchronous [[beginCompactShardTiered]] + [[finishCompact]];
@@ -636,25 +611,11 @@ object StoreRoot {
   def compactShardTiered(spark: SparkSession, root: String,
                          shardCol: String = "source", fanout: Int = 4,
                          keep: Int = 0): Boolean =
-    beginTier(root, shardTierOps(spark, shardCol, fanout, keep),
+    beginTier(root, shardVerbs(spark, shardCol, keep), fanout, keep,
         background = false) match {
       case None => false
       case Some(f) => finishCompact(f); true
     }
-
-  private def vectorTierOps(spark: SparkSession, fanout: Int, keep: Int,
-                            idCol: String): TierOps = TierOps(
-    spark,
-    plan = dir => VectorIndexSink.tierPlan(dir, fanout, keep)
-      .map { units =>
-        (units.head.tier + 1, units.head.lo, units.last.hi,
-          (sp: SparkSession, staging: String) =>
-            VectorIndexSink.writeTierRun(sp, units,
-              units.head.tier + 1, staging, idCol))
-      },
-    maxRunId = VectorIndexSink.maxRunId,
-    sweep = VectorIndexSink.sweepCovered,
-    runsParent = dir => new java.io.File(dir, "runs"))
 
   /** [[beginCompactShardTiered]]'s contract on the vector root: fold
     * the oldest `fanout` same-tier units (append/tombstone arms at
@@ -663,7 +624,7 @@ object StoreRoot {
   def beginCompactVectorsTiered(spark: SparkSession, root: String,
                                 fanout: Int = 4, keep: Int = 0,
                                 idCol: String = "vec_id"): Option[Fold] =
-    beginTier(root, vectorTierOps(spark, fanout, keep, idCol),
+    beginTier(root, vectorVerbs(spark, keep, idCol), fanout, keep,
       background = true)
 
   /** Synchronous [[beginCompactVectorsTiered]] + [[finishCompact]];
@@ -671,7 +632,7 @@ object StoreRoot {
   def compactVectorsTiered(spark: SparkSession, root: String,
                            fanout: Int = 4, keep: Int = 0,
                            idCol: String = "vec_id"): Boolean =
-    beginTier(root, vectorTierOps(spark, fanout, keep, idCol),
+    beginTier(root, vectorVerbs(spark, keep, idCol), fanout, keep,
         background = false) match {
       case None => false
       case Some(f) => finishCompact(f); true

@@ -46,113 +46,58 @@ object VectorIndexSink {
     StoreFiles.publishedDirs(s"$indexDir/tombstones", "d",
       StoreFiles.hasParquet)
 
+  /** The index's tier layout ([[TierRuns]]): tier-0 arms are the append
+    * deltas `appends/b<n>` and tombstone sets `tombstones/d<n>` (one
+    * batch sequence — an id may carry both); runs live under `runs/`.
+    * A run covering a batch range holds (a) `rows/` — the in-range
+    * append rows that survive the in-range tombstones, each keeping its
+    * ORIGINAL batch tag `__b` physical and its `__list` partitioning,
+    * and (b) `tombs/` — the per-id MAX tombstone batch `__t` of the
+    * range, retained because those tombstones still mask the base
+    * (batch -1) and any earlier run's rows. The masked read over run ∪
+    * live arms is therefore IDENTICAL to the unfolded view ("dies iff
+    * some tombstone at-or-after the append batch" is preserved by
+    * per-id max). Either side is absent when the range had none. */
+  private[graft] def layout(indexDir: String): TierRuns.Layout =
+    TierRuns.Layout(indexDir, new java.io.File(indexDir, "runs"), () =>
+      deltaDirs(indexDir).map { case (b, f) =>
+        TierRuns.Arm(b, s"appends/b$b", f) } ++
+        tombstoneDirs(indexDir).map { case (d, f) =>
+          TierRuns.Arm(d, s"tombstones/d$d", f) })
+
+  /** The unit's append delta / tombstone set, if it has one. */
+  private def appendArm(u: TierRuns.TierUnit): Option[java.io.File] =
+    u.arms.find(_.rel.startsWith("appends/")).map(_.dir)
+  private def tombArm(u: TierRuns.TierUnit): Option[java.io.File] =
+    u.arms.find(_.rel.startsWith("tombstones/")).map(_.dir)
+
+  /** The `rows`/`tombs` parts present in the given runs. */
+  private def runParts(units: Seq[TierRuns.TierUnit],
+                       part: String): Seq[String] =
+    units.flatMap(_.run).map(new java.io.File(_, part))
+      .filter(_.isDirectory).map(_.getAbsolutePath)
+
   /** Distinct published batch ids — [[StoreRoot]]'s anything-to-fold
     * check under a retention window. Counts LIVE units: tier runs
     * collapse the arm batches they cover into one unit each. */
   private[graft] def batchCount(indexDir: String): Int =
-    liveUnits(indexDir).size
-
-  // ---- size-tiered (LSM) runs ----
-  //
-  // [[ShardSink]]'s tier-run design on the vector store's arms: a run
-  // covers a CONTIGUOUS batch-id range and holds (a) `rows/` — the
-  // in-range append rows that survive the in-range tombstones, each
-  // keeping its ORIGINAL batch tag `__b` physical and its `__list`
-  // partitioning, and (b) `tombs/` — the per-id MAX tombstone batch
-  // `__t` of the range, retained because those tombstones still mask
-  // the base (batch -1) and any earlier run's rows. The global masked
-  // read over run ∪ live arms is therefore IDENTICAL to the unfolded
-  // view ("dies iff some tombstone at-or-after the append batch" is
-  // preserved by per-id max). Runs live under `runs/` — `u<id>`
-  // committed-but-unreferenced, one atomic rename to `t<id>` as the
-  // swap, covered arms retired after: the same crash windows as the
-  // shard store's tier machine.
-
-  /** One live unit: a batch id's arm(s) (`tier` 0 — an append delta, a
-    * tombstone set, or both at one id) or a referenced tier run. */
-  private[graft] final case class VUnit(tier: Int, lo: Long, hi: Long,
-      run: Option[java.io.File], append: Option[java.io.File],
-      tomb: Option[java.io.File])
-
-  private def runsDir(indexDir: String): String = s"$indexDir/runs"
-
-  private def hasRunMarker(d: java.io.File): Boolean =
-    new java.io.File(d, StoreFiles.TierRunMarker).isFile
-
-  private def runUnits(indexDir: String, prefix: String): Seq[VUnit] =
-    StoreFiles.publishedDirs(runsDir(indexDir), prefix, hasRunMarker)
-      .flatMap { case (_, d) =>
-        StoreFiles.runMeta(d).map { case (t, lo, hi) =>
-          VUnit(t, lo, hi, Some(d), None, None) }
-      }
-
-  /** Referenced runs not nested inside a strictly larger one — the
-    * run arms [[read]] scans. */
-  private def liveRuns(indexDir: String): Seq[VUnit] = {
-    val runs = runUnits(indexDir, "t")
-    runs.filter(r => !runs.exists(o =>
-      o.lo <= r.lo && r.hi <= o.hi && (o.hi - o.lo) > (r.hi - r.lo)))
-  }
-
-  /** The store's live units ascending by batch range: maximal runs
-    * plus every uncovered arm batch id (see [[ShardSink.liveUnits]]
-    * for the structural-liveness rationale). */
-  private[graft] def liveUnits(indexDir: String): Seq[VUnit] = {
-    val runs = liveRuns(indexDir)
-    def covered(id: Long) = runs.exists(r => r.lo <= id && id <= r.hi)
-    val app = deltaDirs(indexDir).toMap
-    val ts = tombstoneDirs(indexDir).toMap
-    val arms = (app.keySet ++ ts.keySet).filterNot(covered).toSeq.sorted
-      .map(id => VUnit(0, id, id, None, app.get(id), ts.get(id)))
-    (runs ++ arms).sortBy(u => (u.lo, -u.hi))
-  }
-
-  /** Highest batch any referenced run covers — the tiered retention
-    * floor (asOf below it fails loudly; appends/tombstones at or below
-    * it are re-deliveries and skip). */
-  private[graft] def tieredFloor(indexDir: String): Option[Long] =
-    runUnits(indexDir, "t").map(_.hi).maxOption
-
-  /** Committed-but-unreferenced runs — adopted by the tiered begin. */
-  private[graft] def pendingRuns(indexDir: String): Seq[VUnit] =
-    runUnits(indexDir, "u")
-
-  private[streaming] def maxRunId(indexDir: String): Long =
-    (StoreFiles.publishedDirs(runsDir(indexDir), "t", hasRunMarker) ++
-      StoreFiles.publishedDirs(runsDir(indexDir), "u", hasRunMarker))
-      .map(_._1).maxOption.getOrElse(-1L)
-
-  /** The size-tiered fold plan — [[ShardSink.tierPlan]]'s rule on the
-    * vector units: the oldest window of `fanout` consecutive live
-    * units sharing one tier, never touching the newest `keep`. */
-  private[graft] def tierPlan(indexDir: String, fanout: Int,
-                              keep: Int): Option[Seq[VUnit]] = {
-    require(fanout >= 2, s"tier fanout must be >= 2: $fanout")
-    val units = liveUnits(indexDir).dropRight(keep)
-    (0 to units.length - fanout).view
-      .map(i => units.slice(i, i + fanout))
-      .find(w => w.forall(_.tier == w.head.tier))
-  }
+    TierRuns.liveUnits(layout(indexDir)).size
 
   /** Write the tier run folding `units` into `staging` (`rows/` +
-    * `tombs/` + range marker — see the layout note above). Reads
-    * O(units), never the base or the rest of the store. */
+    * `tombs/` + range marker — see [[layout]]). Reads O(units), never
+    * the base or the rest of the store. */
   private[streaming] def writeTierRun(spark: SparkSession,
-      units: Seq[VUnit], tier: Int, staging: String,
+      units: Seq[TierRuns.TierUnit], tier: Int, staging: String,
       idCol: String): Unit = {
     val rowArms = units.flatMap { u =>
-      u.run.filter(r => new java.io.File(r, "rows").isDirectory)
-        .map(r => spark.read.parquet(s"${r.getAbsolutePath}/rows"))
-        .toSeq ++
-        u.append.map(a => spark.read.parquet(a.getAbsolutePath)
+      runParts(Seq(u), "rows").map(spark.read.parquet(_)) ++
+        appendArm(u).map(a => spark.read.parquet(a.getAbsolutePath)
           .withColumn("__b", lit(u.lo)))
     }
     val tombArms = units.flatMap { u =>
-      u.run.filter(r => new java.io.File(r, "tombs").isDirectory)
-        .map(r => spark.read.parquet(s"${r.getAbsolutePath}/tombs")
-          .select(col(idCol), col("__t")))
-        .toSeq ++
-        u.tomb.map(t => spark.read.parquet(t.getAbsolutePath)
+      runParts(Seq(u), "tombs")
+        .map(spark.read.parquet(_).select(col(idCol), col("__t"))) ++
+        tombArm(u).map(t => spark.read.parquet(t.getAbsolutePath)
           .select(col(idCol), lit(u.lo).as("__t")))
     }
     val tombs =
@@ -196,51 +141,6 @@ object VectorIndexSink {
         s"hi=${units.last.hi}"))
   }
 
-  /** Retire every arm/run a referenced run covers, plus abandoned fold
-    * staging — the tier machine's retire verb and swap-no-retire heal
-    * (idempotent; covered dirs are invisible to reads either way). */
-  private[streaming] def sweepCovered(indexDir: String): Unit = {
-    val runs = liveRuns(indexDir)
-    def covered(lo: Long, hi: Long): Boolean =
-      runs.exists(r => r.lo <= lo && hi <= r.hi &&
-        (r.hi - r.lo) > (hi - lo))
-    deltaDirs(indexDir).foreach { case (b, f) =>
-      if (covered(b, b)) StoreFiles.deleteRec(f)
-    }
-    tombstoneDirs(indexDir).foreach { case (t, f) =>
-      if (covered(t, t)) StoreFiles.deleteRec(f)
-    }
-    runUnits(indexDir, "t").foreach { r =>
-      if (covered(r.lo, r.hi)) StoreFiles.deleteRec(r.run.get)
-    }
-    Option(new java.io.File(runsDir(indexDir)).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(".staging-u"))
-      .foreach(StoreFiles.deleteRec)
-  }
-
-  /** Post-kill disk forensics for the tiered machine — see
-    * [[ShardSink.tieredWindow]]. */
-  private[graft] def tieredWindow(indexDir: String): String = {
-    val pre = pendingRuns(indexDir).nonEmpty ||
-      Option(new java.io.File(runsDir(indexDir)).listFiles())
-        .getOrElse(Array.empty)
-        .exists(f => f.isDirectory && f.getName.startsWith(".staging-u"))
-    if (pre) "pre-swap"
-    else {
-      val runs = liveRuns(indexDir)
-      def covered(lo: Long, hi: Long): Boolean =
-        runs.exists(r => r.lo <= lo && hi <= r.hi &&
-          (r.hi - r.lo) > (hi - lo))
-      val unretired =
-        deltaDirs(indexDir).exists { case (b, _) => covered(b, b) } ||
-          tombstoneDirs(indexDir).exists { case (t, _) =>
-            covered(t, t) } ||
-          runUnits(indexDir, "t").exists(r => covered(r.lo, r.hi))
-      if (unretired) "swap-no-retire" else "none"
-    }
-  }
-
   /** Append one batch under the frozen codebooks as delta `b<batchId>`.
     * Returns false (no work) if that delta is already published — the
     * at-least-once re-delivery path. Also the non-streaming entry
@@ -251,7 +151,7 @@ object VectorIndexSink {
     StoreFiles.requireNotRetired(indexDir, "vector index")
     // a batch at or below the tiered floor was folded into a tier run
     // (its arm dir is retired, so publishOnce alone would NOT skip it)
-    if (tieredFloor(indexDir).exists(batchId <= _)) return false
+    if (TierRuns.floor(layout(indexDir)).exists(batchId <= _)) return false
     StoreFiles.publishOnce(s"$indexDir/.staging-b$batchId",
       new java.io.File(s"$indexDir/appends/b$batchId"), { staging =>
         val idx = Similarity.ivfPqLoad(spark, indexDir) // codebooks
@@ -294,7 +194,7 @@ object VectorIndexSink {
                   ids: DataFrame, idCol: String = "vec_id"): Boolean = {
     StoreFiles.requireNotRetired(indexDir, "vector index")
     // same tiered-floor re-delivery skip as [[appendBatch]]
-    if (tieredFloor(indexDir).exists(batchId <= _)) return false
+    if (TierRuns.floor(layout(indexDir)).exists(batchId <= _)) return false
     StoreFiles.publishOnce(s"$indexDir/.staging-d$batchId",
       new java.io.File(s"$indexDir/tombstones/d$batchId"), { staging =>
         ids.select(idCol).distinct()
@@ -319,40 +219,25 @@ object VectorIndexSink {
     // snapshot an evaluation run pins so its candidate set cannot
     // drift under later ingest. Published batches are immutable, so
     // the same asOf always serves the same view. An asOf below the
-    // TIERED floor cannot be served (rows the runs' in-range masking
-    // resolved away exist nowhere) and fails loudly; at or above it
-    // every run is fully included (hi <= floor <= asOf).
-    val runs = liveRuns(indexDir)
-    for (v <- asOf; f <- runs.map(_.hi).maxOption)
-      if (v < f) throw new IllegalStateException(
-        s"vector index at $indexDir: asOf=$v is below the tiered " +
-          s"retention floor $f - batches inside a tier run's range " +
-          "were resolved physically by compaction; history below the " +
-          "floor is beyond retention")
-    def live(id: Long) = !runs.exists(r => r.lo <= id && id <= r.hi)
-    def upTo[A](ds: Seq[(Long, A)]): Seq[(Long, A)] =
-      asOf.fold(ds)(v => ds.filter(_._1 <= v))
-        .filter { case (id, _) => live(id) }
+    // TIERED floor cannot be served and fails loudly.
+    val (runs, arms) =
+      TierRuns.liveUnits(layout(indexDir)).partition(_.run.isDefined)
+    TierRuns.requireAsOf("vector index", indexDir, asOf,
+      runs.map(_.hi).maxOption)
+    val visible = asOf.fold(arms)(v => arms.filter(_.lo <= v))
     // tag every arm with its append batch; the base predates all
     // batches, so any tombstone masks it; run rows carry their batch
     // tags (and run tombstones their batch) physically
-    val enc = (runs
-      .filter(r => new java.io.File(r.run.get, "rows").isDirectory)
-      .map(r => spark.read
-        .parquet(s"${r.run.get.getAbsolutePath}/rows")) ++
-      upTo(deltaDirs(indexDir)).map { case (b, f) =>
-        spark.read.parquet(f.getAbsolutePath).withColumn("__b", lit(b))
-      })
+    val enc = (runParts(runs, "rows").map(spark.read.parquet(_)) ++
+      visible.flatMap(u => appendArm(u).map(f => spark.read
+        .parquet(f.getAbsolutePath).withColumn("__b", lit(u.lo)))))
       .foldLeft(base.encoded.withColumn("__b", lit(-1L)))(
         _ unionByName _)
-    val dead = (runs
-      .filter(r => new java.io.File(r.run.get, "tombs").isDirectory)
-      .map(r => spark.read
-        .parquet(s"${r.run.get.getAbsolutePath}/tombs")
-        .select(col(idCol), col("__t"))) ++
-      upTo(tombstoneDirs(indexDir)).map { case (t, f) =>
-        spark.read.parquet(f.getAbsolutePath).withColumn("__t", lit(t))
-      }).reduceOption(_ unionByName _)
+    val dead = (runParts(runs, "tombs")
+      .map(spark.read.parquet(_).select(col(idCol), col("__t"))) ++
+      visible.flatMap(u => tombArm(u).map(f => spark.read
+        .parquet(f.getAbsolutePath).withColumn("__t", lit(u.lo)))))
+      .reduceOption(_ unionByName _)
     val masked = dead match {
       case None => enc
       case Some(d0) =>
@@ -391,7 +276,7 @@ object VectorIndexSink {
     * whole served table, O(current index) not O(arms folded), so a
     * long-lived deployment keeps its triggers flat by folding
     * OUT-OF-BAND ([[StoreRoot.beginCompactVectors]]) and paying only
-    * the O(late-arms) [[topUp]] + swap + retire inline. */
+    * the O(late-arms) [[TierRuns.topUp]] + swap + retire inline. */
   def compact(spark: SparkSession, indexDir: String,
               outDir: String, keepBatches: Int = 0,
               idCol: String = "vec_id"): Unit = {
@@ -405,12 +290,12 @@ object VectorIndexSink {
     // would serve the mixture (the alternating-two-dirs compaction
     // pattern hits exactly this) — fail loudly instead
     require(!new java.io.File(s"$outDir/encoded").exists()
-        && deltaDirs(outDir).isEmpty && tombstoneDirs(outDir).isEmpty,
+        && layout(outDir).arms.isEmpty,
       s"compaction target $outDir already holds index state - " +
         "compact into a fresh directory")
-    val ids = (deltaDirs(indexDir).map(_._1)
-      ++ tombstoneDirs(indexDir).map(_._1)).distinct.sorted
-    val maxCovered = ((ids :+ -1L) ++ tieredFloor(indexDir)).max
+    val l = layout(indexDir)
+    val ids = l.arms.map(_.id).distinct.sorted
+    val maxCovered = TierRuns.latestCovered(l).getOrElse(-1L)
     // the newest `keepBatches` ids stay live deltas; everything at or
     // below the cutoff folds (cutoff -1 = base only, fold is a
     // rewrite). A tiered store clamps the cutoff at the TIERED floor —
@@ -420,58 +305,13 @@ object VectorIndexSink {
     val rawCutoff =
       if (ids.length > keepBatches) ids(ids.length - 1 - keepBatches)
       else -1L
-    val cutoff = (Seq(rawCutoff) ++ tieredFloor(indexDir)).max
+    val cutoff = (Seq(rawCutoff) ++ TierRuns.floor(l)).max
     Similarity.ivfPqSave(
       read(spark, indexDir, idCol, asOf = Some(cutoff)), outDir)
-    (deltaDirs(indexDir).filter(_._1 > cutoff).map {
-      case (n, f) => (s"appends/b$n", f) } ++
-      tombstoneDirs(indexDir).filter(_._1 > cutoff).map {
-        case (n, f) => (s"tombstones/d$n", f) })
-      .foreach { case (rel, f) =>
-        StoreFiles.publishOnce(s"$outDir/.staging-${rel.replace('/', '-')}",
-          new java.io.File(s"$outDir/$rel"),
-          staging => StoreFiles.copyRec(f, new java.io.File(staging)))
-      }
+    TierRuns.copyArmsAbove(l, outDir, cutoff)
     // lineage marker AFTER the fold commits — [[retire]]'s precondition
     StoreFiles.writeCompactedFrom(outDir, indexDir, maxCovered,
       floor = Some(cutoff))
-  }
-
-  /** TOP-UP a committed compaction target with the append/tombstone
-    * arms its source grew AFTER the fold was cut — [[ShardSink.topUp]]'s
-    * contract on the vector store: arms are copied verbatim (same batch
-    * keys, staged + published, idempotent under re-run), then the
-    * lineage marker's `max` advances atomically with `floor` pinned at
-    * the fold cutoff. Copied tombstones keep masking by batch order
-    * (the folded base carries tag -1, so any copied tombstone still
-    * masks it); no-op when the target already covers the source. */
-  private[graft] def topUp(indexDir: String, outDir: String): Unit = {
-    val m = StoreFiles.readMarker(
-        new java.io.File(outDir, StoreFiles.CompactedFromMarker))
-      .getOrElse(throw new IllegalStateException(
-        s"top-up target $outDir carries no committed fold marker - " +
-          "nothing to top up (a partial fold is swept and redone, " +
-          "never topped up)"))
-    val max = m("max").toLong
-    // same serialization guard as [[ShardSink.topUp]]: a tier run past
-    // the generation fold's cut means tier and generation folds
-    // interleaved on this store
-    require(!tieredFloor(indexDir).exists(_ > max),
-      s"top-up source $indexDir grew a tier run past the generation " +
-        s"fold's cut b$max - tier and generation folds must not " +
-        "interleave on one store")
-    val late = deltaDirs(indexDir).filter(_._1 > max).map {
-      case (n, f) => (n, s"appends/b$n", f) } ++
-      tombstoneDirs(indexDir).filter(_._1 > max).map {
-        case (n, f) => (n, s"tombstones/d$n", f) }
-    if (late.isEmpty) return
-    late.foreach { case (_, rel, f) =>
-      StoreFiles.publishOnce(s"$outDir/.staging-${rel.replace('/', '-')}",
-        new java.io.File(s"$outDir/$rel"),
-        staging => StoreFiles.copyRec(f, new java.io.File(staging)))
-    }
-    StoreFiles.writeCompactedFrom(outDir, indexDir, late.map(_._1).max,
-      floor = Some(m.getOrElse("floor", m("max")).toLong))
   }
 
   /** Retention: delete a PRE-COMPACTION index layout after its readers
@@ -486,13 +326,8 @@ object VectorIndexSink {
     * the payload sweep and outlives it, so a late reader — including
     * any `asOf`, now below the retention floor — fails loudly naming
     * the successor, never serves a partial index. */
-  def retire(indexDir: String, compactedTo: String): Unit = {
-    val latest = deltaDirs(indexDir).map(_._1) ++
-      tombstoneDirs(indexDir).map(_._1) ++ tieredFloor(indexDir)
-    StoreFiles.beginRetire(indexDir, compactedTo,
-      if (latest.isEmpty) None else Some(latest.max))
-    StoreFiles.deletePayload(indexDir)
-  }
+  def retire(indexDir: String, compactedTo: String): Unit =
+    TierRuns.retire(layout(indexDir), compactedTo)
 
   /** Operational description of the index store — one row per arm
     * (`base`, each append delta, each tombstone set): its batch id
@@ -518,36 +353,33 @@ object VectorIndexSink {
     // deferred. The codebooks are never loaded (describe reads arm
     // FILES only — it even works on a store whose base is mid-append,
     // which is exactly when an operator reaches for observability).
-    val ts = tombstoneDirs(indexDir)
-    val runs = liveRuns(indexDir)
-    def live(id: Long) = !runs.exists(r => r.lo <= id && id <= r.hi)
+    val (runs, units) =
+      TierRuns.liveUnits(layout(indexDir)).partition(_.run.isDefined)
+    val ts = units.flatMap(u => tombArm(u).map(u.lo -> _))
     val arms =
       (("base", -1L,
         spark.read.parquet(s"$indexDir/encoded"))
-        +: deltaDirs(indexDir).filter(d => live(d._1)).map {
-        case (b, f) =>
-          ("append", b, spark.read.parquet(f.getAbsolutePath))
-      }) ++ ts.filter(t => live(t._1)).map { case (t, f) =>
-        ("tombstone", t, spark.read.parquet(f.getAbsolutePath))
-      }
+        +: units.flatMap(u => appendArm(u).map(f =>
+          ("append", u.lo, spark.read.parquet(f.getAbsolutePath))))) ++
+        ts.map { case (t, f) =>
+          ("tombstone", t, spark.read.parquet(f.getAbsolutePath))
+        }
     val unioned = (arms.map { case (kind, b, df) =>
       df.select(col(idCol).as("__id"), lit(kind).as("kind"),
         lit(b).as("batch"))
-    } ++ runs // run rows keep per-original-batch granularity via __b
-      .filter(r => new java.io.File(r.run.get, "rows").isDirectory)
-      .map(r => spark.read.parquet(s"${r.run.get.getAbsolutePath}/rows")
+    } ++ runParts(runs, "rows") // run rows keep per-batch tags via __b
+      .map(spark.read.parquet(_)
         .select(col(idCol).as("__id"), lit("run").as("kind"),
           col("__b").as("batch")))
       ).reduce(_ unionByName _)
-    val runTombs = runs
-      .filter(r => new java.io.File(r.run.get, "tombs").isDirectory)
-      .map(r => spark.read.parquet(s"${r.run.get.getAbsolutePath}/tombs")
+    val runTombs = runParts(runs, "tombs")
+      .map(spark.read.parquet(_)
         .select(col(idCol).as("__did"), col("__t")))
     val flagged =
-      if (ts.forall(t => !live(t._1)) && runTombs.isEmpty)
+      if (ts.isEmpty && runTombs.isEmpty)
         unioned.withColumn("__m", lit(false))
       else {
-        val tmax = (ts.filter(t => live(t._1)).map { case (t, f) =>
+        val tmax = (ts.map { case (t, f) =>
           spark.read.parquet(f.getAbsolutePath)
             .select(col(idCol).as("__did"), lit(t).as("__t"))
         } ++ runTombs).reduce(_ unionByName _)

@@ -4,6 +4,10 @@ package graft.tools
   * manual discipline that cost round 11 a clobbered clean pass and two
   * discarded runs. One full-pass invocation that:
   *
+  *  0. **core-count gate** — refuses to start when the committed
+  *     artifact was measured at another `SPARK_GRAFT_CPUS` (walls at 8
+  *     and 32 cores are not comparable; an artifact that predates the
+  *     `cpus` field is compared as before);
   *  1. **uptime gate** — refuses to start when the 1-minute load average
   *     says another tenant is already burning this shared VM (a full
   *     pass started then is a pre-inflated pass);
@@ -32,8 +36,8 @@ package graft.tools
   *
   * Exit codes: 0 clean (no unresolved flags; the artifact was replaced
   * only if the raw geomean was also inside the threshold), 2 refused
-  * (host busy), 3 regressed pass discarded, 4 unresolved flags after
-  * probes.
+  * (host busy or core-count mismatch), 3 regressed pass discarded, 4
+  * unresolved flags after probes.
   * Knobs (env): SPARK_GRAFT_GUARD_MAXLOAD (default 1.0),
   * SPARK_GRAFT_GUARD_INFLATION (geomean threshold, default 1.2),
   * SPARK_GRAFT_GUARD_FLAG (per-query threshold, default 1.5),
@@ -68,6 +72,21 @@ object BenchGuard {
   private[graft] def parseCalibrationIo(json: String): Option[Double] =
     "\"calibration_io\":([0-9.]+)".r.findFirstMatchIn(json)
       .map(_.group(1).toDouble)
+
+  /** The "cpus" core count the pass ran at. Absent from artifacts that
+    * predate the field. */
+  private[graft] def parseCpus(json: String): Option[Int] =
+    "\"cpus\":([0-9]+)".r.findFirstMatchIn(json).map(_.group(1).toInt)
+
+  /** The refusal line when the committed artifact ran at another core
+    * count than this pass would (`cpus`, Bench's `SPARK_GRAFT_CPUS`);
+    * None when the two compare — same count, no artifact, or an
+    * artifact without the field. */
+  private[graft] def cpusRefusal(committed: Option[String],
+                                 cpus: String): Option[String] =
+    committed.flatMap(parseCpus).filter(_.toString != cpus.trim)
+      .map(c => s"""{"guard":"refused_cpus","artifact_cpus":$c,""" +
+        s""""cpus":"$cpus"}""")
 
   /** TELEMETRY-only attribution of a pass's host drift across the two
     * anchors — which side of the machine moved. Never feeds the
@@ -135,6 +154,16 @@ object BenchGuard {
     val probeRuns = envD("SPARK_GRAFT_GUARD_PROBE_RUNS", 5).toInt
     val settleMs = envD("SPARK_GRAFT_GUARD_SETTLE_SEC", 60).toLong * 1000
     val artifact = java.nio.file.Paths.get("BENCH_LOCAL.json")
+    val committed =
+      if (java.nio.file.Files.exists(artifact))
+        Some(java.nio.file.Files.readAllBytes(artifact))
+      else None
+    // the same default Bench runs at
+    cpusRefusal(committed.map(new String(_, "UTF-8")),
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).foreach { line =>
+      println(line)
+      sys.exit(2)
+    }
 
     // the sbt/JVM launch that got US here spikes the 1-minute load by
     // ~1.0 all by itself (measured: 0.17 -> 1.32 across a 6 s sbt
@@ -149,10 +178,6 @@ object BenchGuard {
       println(s"""{"guard":"refused_load","load":$load,"max":$maxLoad}""")
       sys.exit(2)
     }
-    val committed =
-      if (java.nio.file.Files.exists(artifact))
-        Some(java.nio.file.Files.readAllBytes(artifact))
-      else None
     val ref = committed
       .map(b => parseQueries(new String(b, "UTF-8")))
       .getOrElse(Map.empty)

@@ -238,16 +238,11 @@ object CrashHarness {
   /** [[compactionWindow]]'s twin for the SIZE-TIERED machine: a fold
     * staging dir or committed-unreferenced `u` run = `pre-swap`; a
     * referenced run whose covered sources are still on disk =
-    * `swap-no-retire`. Tries both stores' classifiers (a shard layout
-    * reads `none` under the vector classifier and vice versa), rarest
-    * window first. */
+    * `swap-no-retire` ([[graft.streaming.TierRuns.window]] over the
+    * root's own layout). */
   private[graft] def tieredCompactionWindow(root: String): String = {
-    import graft.streaming.{ShardSink, StoreRoot, VectorIndexSink}
-    val dir = StoreRoot.currentDir(root)
-    val ws = Seq(ShardSink.tieredWindow(dir),
-      VectorIndexSink.tieredWindow(dir))
-    ws.find(_ == "swap-no-retire")
-      .orElse(ws.find(_ != "none")).getOrElse("none")
+    import graft.streaming.{StoreRoot, TierRuns}
+    TierRuns.window(StoreRoot.layoutOf(StoreRoot.currentDir(root)))
   }
 
   /** One kill iteration: stage fresh fixtures, spawn the child, wait

@@ -109,4 +109,23 @@ class BenchGuardSpec extends AnyFunSuite {
     // symmetric on deflation (a FASTER host window still drifts)
     assert(driftKind(0.72, Some(0.99)) == "cpu-dominant")
   }
+
+  test("cpus gate: an artifact measured at another core count is " +
+      "refused before a pass starts; same count, no artifact, or an " +
+      "artifact without the field compares as before") {
+    import graft.tools.BenchGuard.{cpusRefusal, parseCpus}
+    val j32 = """{"metric":"total","value":9.9,"unit":"sec","runs":2,""" +
+      """"cpus":32,"git_sha":"unavailable","calibration":3.125,""" +
+      """"queries":{"q01_agg":1.5}}"""
+    val old = """{"metric":"total","runs":2,"calibration":3.1,""" +
+      """"queries":{"q01_agg":1.5}}"""
+    assert(parseCpus(j32).contains(32))
+    assert(parseCpus(old).isEmpty)
+    val refused = cpusRefusal(Some(j32), "8")
+    assert(refused.exists(l => l.contains("\"refused_cpus\"") &&
+      l.contains("\"artifact_cpus\":32")), refused)
+    assert(cpusRefusal(Some(j32), "32").isEmpty)
+    assert(cpusRefusal(Some(old), "8").isEmpty)
+    assert(cpusRefusal(None, "8").isEmpty)
+  }
 }

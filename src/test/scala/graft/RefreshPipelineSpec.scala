@@ -335,6 +335,83 @@ class RefreshPipelineSpec extends SparkSpec {
     assert(!autoPackSkew(hotRows = 0, totalRows = 0)) // empty batch
   }
 
+  test("packSkewProbe: hot and balanced batches route as brute force " +
+      "over the shard keys says, from metrics the batch's own job " +
+      "observes - the probe itself launches no job") {
+    import RefreshPipeline.{autoPackSkew, packSkewProbe, skewProbeMetrics,
+      AutoPackSkewFloor, SkewProbeTracked}
+    // 12 named shards plus a NULL shard (its own group); `hot` moves
+    // the first 5k rows into one shard
+    def frame(n: Long, hot: Boolean) = {
+      val spread = when(col("id") % 13 === 12, lit(null).cast("string"))
+        .otherwise(concat(lit("s"), (col("id") % 12).cast("string")))
+      spark.range(n).select((if (!hot) spread
+        else when(col("id") < 5000L, lit("hot")).otherwise(spread))
+        .as("source"))
+    }
+    def hotRows(df: org.apache.spark.sql.DataFrame): Long =
+      df.select("source").as[Option[String]].collect()
+        .groupBy(identity).values.map(_.length.toLong).max
+    def brute(df: org.apache.spark.sql.DataFrame): Boolean =
+      autoPackSkew(hotRows = hotRows(df), totalRows = df.count())
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // observe the metrics on the checkpoint that materializes the batch
+    // (as the tiers checkpoint does), then count the probe's own jobs
+    def probe(df: org.apache.spark.sql.DataFrame)
+        : (Boolean, Int, Map[String, Any]) = {
+      val obs = org.apache.spark.sql.Observation()
+      val ms = skewProbeMetrics("source")
+      df.observe(obs, ms.head, ms.tail: _*).localCheckpoint(true)
+      val observed = obs.get
+      org.apache.spark.sql.graftglue.GraftGlue
+        .drainListenerBus(spark.sparkContext)
+      jobs.set(0)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val r = packSkewProbe(observed)
+        org.apache.spark.sql.graftglue.GraftGlue
+          .drainListenerBus(spark.sparkContext)
+        (r, jobs.get, observed)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    def observedHot(m: Map[String, Any]): Long =
+      m("__hot").asInstanceOf[Seq[org.apache.spark.sql.Row]].head.getLong(1)
+    for (hot <- Seq(true, false)) {
+      val df = frame(12000L, hot)
+      val (routed, n, m) = probe(df)
+      assert(routed == brute(df) && routed == hot, s"hot=$hot")
+      assert(n == 0)
+      // fewer shards than the sketch tracks: the hot count is exact
+      assert(observedHot(m) == hotRows(df) && m("__t") == 12000L)
+    }
+    // one shard holds every row, yet below the floor the rule says no
+    val small = frame(AutoPackSkewFloor - 1, hot = true)
+      .withColumn("source", lit("hot"))
+    assert(!brute(small))
+    val (smallRouted, smallJobs, _) = probe(small)
+    assert(!smallRouted && smallJobs == 0)
+    // just under the sketch's tracked count the hot count stays exact
+    val many = 3L * SkewProbeTracked
+    val tracked = spark.range(many).select(when(col("id") < many * 2 / 5,
+      lit("hot")).otherwise((col("id") % (SkewProbeTracked - 2))
+      .cast("string")).as("source"))
+    assert(observedHot(probe(tracked)._3) == hotRows(tracked))
+    // more distinct shards than the sketch tracks: the hot shard is
+    // still found, and a frame of all-distinct shards stays unrouted
+    val wide = spark.range(many).select(when(col("id") < many * 2 / 5,
+      lit("hot")).otherwise(col("id").cast("string")).as("source"))
+    assert(brute(wide) && probe(wide)._1)
+    val flat = spark.range(many).select(col("id").cast("string")
+      .as("source"))
+    assert(!brute(flat) && !probe(flat)._1)
+  }
+
   test("providerClass swap: RocksDB drain over a stateful upstream is " +
       "output-identical and the session conf is restored") {
     val key = "spark.sql.streaming.stateStore.providerClass"

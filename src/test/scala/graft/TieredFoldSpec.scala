@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.{Bpe, BpeByteVocab}
 import graft.operators.Similarity
-import graft.streaming.{RefreshPipeline, ShardSink, StoreFiles, StoreRoot, VectorIndexSink}
+import graft.tools.CrashHarness
+import graft.streaming.{RefreshPipeline, ShardSink, StoreFiles, StoreRoot, TierRuns, VectorIndexSink}
 
 /** Size-tiered (LSM) compaction folds inside a generation: fold K
   * delta versions into a tier-1 run, K tier-1 runs into tier-2, full
@@ -69,19 +70,19 @@ class TieredFoldSpec extends SparkSpec {
       assert(StoreRoot.currentGen(root) == 0L) // no generation swap
       assert(digest(StoreRoot.readShard(spark, root)) == full)
       assert(StoreRoot.floor(root).contains(1L))
-      val u1 = ShardSink.liveUnits(dir)
+      val u1 = TierRuns.liveUnits(ShardSink.layout(dir))
       assert(u1.map(u => (u.tier, u.lo, u.hi)) ==
         Seq((1, 0L, 1L), (0, 2L, 2L), (0, 3L, 3L), (0, 4L, 4L)), u1)
       // fold 2: [v2, v3] -> second tier-1 run
       assert(StoreRoot.compactShardTiered(spark, root, fanout = 2))
       assert(digest(StoreRoot.readShard(spark, root)) == full)
-      val u2 = ShardSink.liveUnits(dir)
+      val u2 = TierRuns.liveUnits(ShardSink.layout(dir))
       assert(u2.map(u => (u.tier, u.lo, u.hi)) ==
         Seq((1, 0L, 1L), (1, 2L, 3L), (0, 4L, 4L)), u2)
       // fold 3: the two adjacent tier-1 runs ESCALATE to one tier-2
       assert(StoreRoot.compactShardTiered(spark, root, fanout = 2))
       assert(digest(StoreRoot.readShard(spark, root)) == full)
-      val u3 = ShardSink.liveUnits(dir)
+      val u3 = TierRuns.liveUnits(ShardSink.layout(dir))
       assert(u3.map(u => (u.tier, u.lo, u.hi)) ==
         Seq((2, 0L, 3L), (0, 4L, 4L)), u3)
       assert(StoreRoot.floor(root).contains(3L))
@@ -105,7 +106,7 @@ class TieredFoldSpec extends SparkSpec {
       assert(StoreRoot.appendShard(spark, root,
         docs(10).withColumn("doc_id", col("doc_id") + 1000000L),
         "__ids", "doc_id", 128, "source", version = 5L))
-      assert(ShardSink.liveUnits(dir).size == 3)
+      assert(TierRuns.liveUnits(ShardSink.layout(dir)).size == 3)
     } finally StoreFiles.deleteRec(base.toFile)
   }
 
@@ -118,46 +119,53 @@ class TieredFoldSpec extends SparkSpec {
       val (root, snaps) = seedShard(base, slices = 4, perSlice = 20)
       val dir = StoreRoot.currentDir(root)
       val full = snaps.last
+      def window = CrashHarness.tieredCompactionWindow(root)
+      assert(window == "none")
       // window 1: fold committed as u<id>, crash before the swap —
       // begin, wait for the background fold, never finish
       val fold = StoreRoot.beginCompactShardTiered(spark, root,
         fanout = 2)
       assert(fold.isDefined && fold.get.tier == 1)
       while (!fold.get.isDone) Thread.sleep(20)
-      assert(ShardSink.pendingRuns(dir).nonEmpty)
+      assert(TierRuns.pendingRuns(ShardSink.layout(dir)).nonEmpty)
+      assert(window == "pre-swap")
       // unreferenced: readers still serve the sources
       assert(digest(StoreRoot.readShard(spark, root)) == full)
       assert(StoreRoot.floor(root).isEmpty)
       // the next cycle ADOPTS the committed run (swap + retire) before
       // planning its own fold
       assert(StoreRoot.compactShardTiered(spark, root, fanout = 2))
-      assert(ShardSink.pendingRuns(dir).isEmpty)
+      assert(TierRuns.pendingRuns(ShardSink.layout(dir)).isEmpty)
       assert(digest(StoreRoot.readShard(spark, root)) == full)
-      val units = ShardSink.liveUnits(dir)
+      val units = TierRuns.liveUnits(ShardSink.layout(dir))
       assert(units.count(_.tier == 1) == 2, units) // adopted + own fold
+      assert(window == "none")
       // window 2: swap-no-retire — rename u -> t manually (the swap),
       // leave the covered sources on disk
       val fold2 = StoreRoot.beginCompactShardTiered(spark, root,
         fanout = 2) // escalates the two tier-1 runs
       assert(fold2.isDefined && fold2.get.tier == 2)
       while (!fold2.get.isDone) Thread.sleep(20)
-      val u = ShardSink.pendingRuns(dir).head
-      java.nio.file.Files.move(u.dir.toPath,
-        new java.io.File(dir, "t" + u.dir.getName.drop(1)).toPath,
+      val u = TierRuns.pendingRuns(ShardSink.layout(dir)).head
+      java.nio.file.Files.move(u.run.get.toPath,
+        new java.io.File(dir, "t" + u.run.get.getName.drop(1)).toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      assert(window == "swap-no-retire")
       // covered-but-present sources are structurally dead: the read is
       // already correct before any heal runs
-      assert(ShardSink.liveUnits(dir).count(_.tier == 1) == 0)
+      assert(TierRuns.liveUnits(ShardSink.layout(dir)).count(_.tier == 1) == 0)
       assert(digest(StoreRoot.readShard(spark, root)) == full)
       val coveredDirs = StoreFiles
         .publishedDirs(dir, "t", _ => true).size
       assert(coveredDirs >= 3) // tier-2 run + its two covered tier-1s
       // window 3 setup: an abandoned staging dir from a crashed fold
       new java.io.File(dir, ".staging-u99/x").mkdirs()
+      assert(window == "pre-swap") // fold staging outranks the swap
       // the next begin heals both: covered sources swept, staging gone
       StoreRoot.compactShardTiered(spark, root, fanout = 2)
       assert(StoreFiles.publishedDirs(dir, "t", _ => true).size == 1)
       assert(!new java.io.File(dir, ".staging-u99").exists())
+      assert(window == "none")
       assert(digest(StoreRoot.readShard(spark, root)) == full)
     } finally StoreFiles.deleteRec(base.toFile)
   }
@@ -240,6 +248,83 @@ class TieredFoldSpec extends SparkSpec {
       assert(StoreRoot.compactVectors(spark, root))
       assert(StoreRoot.currentGen(root) == 1L &&
         served() == want - 44L)
+      org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(vecs)
+    } finally StoreFiles.deleteRec(base.toFile)
+  }
+
+  test("vector tier crash windows: covered arms left by a swap are " +
+      "swept, a committed-unreferenced run is ADOPTED (renamed, never " +
+      "redone), the classifier reads each window on the vector " +
+      "layout, and every state serves the same ids") {
+    val base = java.nio.file.Files.createTempDirectory("graft_tiervcw_")
+    try {
+      val emb = transform(sequence(lit(0), lit(7)),
+        i => sin(col("vec_id") * 3 + i).cast("float"))
+      val vecs = spark.range(0, 80).select(col("id").as("vec_id"))
+        .withColumn("embedding", emb).localCheckpoint(true)
+      val root = s"$base/vroot"
+      Similarity.ivfPqSave(
+        Similarity.ivfPqBuild(vecs.filter(col("vec_id") < 40),
+          vecCol = "embedding", idCol = "vec_id", nLists = 2, m = 4,
+          kCodes = 8, iterations = 2), StoreRoot.init(root))
+      def slice(lo: Long, hi: Long) =
+        vecs.filter(col("vec_id") >= lo && col("vec_id") < hi)
+      // b0: append 40..49; d1: tombstone 5 (base) and 45 (b0);
+      // b2: append 50..59; b3: append 60..69
+      assert(StoreRoot.appendVectors(spark, root, 0L, slice(40, 50)))
+      assert(StoreRoot.deleteVectors(spark, root, 1L,
+        Seq(5L, 45L).toDF("vec_id")))
+      assert(StoreRoot.appendVectors(spark, root, 2L, slice(50, 60)))
+      assert(StoreRoot.appendVectors(spark, root, 3L, slice(60, 70)))
+      val dir = StoreRoot.currentDir(root)
+      def layout = VectorIndexSink.layout(dir)
+      def window = CrashHarness.tieredCompactionWindow(root)
+      // sorted, not a set: a covered arm read twice would duplicate ids
+      def served() = StoreRoot.readVectors(spark, root)
+        .encoded.select("vec_id").as[Long].collect().toSeq.sorted
+      def units = TierRuns.liveUnits(layout).map(u => (u.tier, u.lo, u.hi))
+      val want = ((0L until 70L).toSet - 5L - 45L).toSeq.sorted
+      assert(served() == want && window == "none")
+      // swap-no-retire: the fold of [b0, d1] is swapped by hand and its
+      // covered arms stay on disk — structurally dead, never read
+      val f1 = StoreRoot.beginCompactVectorsTiered(spark, root, fanout = 2)
+      assert(f1.isDefined && f1.get.tier == 1)
+      while (!f1.get.isDone) Thread.sleep(20)
+      TierRuns.swap(TierRuns.pendingRuns(layout).head.run.get)
+      assert(window == "swap-no-retire")
+      assert(new java.io.File(dir, "appends/b0").isDirectory &&
+        new java.io.File(dir, "tombstones/d1").isDirectory)
+      assert(units == Seq((1, 0L, 1L), (0, 2L, 2L), (0, 3L, 3L)), units)
+      assert(served() == want)
+      // the next cycle sweeps them before folding [b2, b3]
+      assert(StoreRoot.compactVectorsTiered(spark, root, fanout = 2))
+      assert(!new java.io.File(dir, "appends/b0").exists() &&
+        !new java.io.File(dir, "tombstones/d1").exists() &&
+        !new java.io.File(dir, "appends/b2").exists())
+      assert(units == Seq((1, 0L, 1L), (1, 2L, 3L)), units)
+      assert(window == "none" && served() == want)
+      // pre-swap: the escalating fold commits u<id> and never swaps;
+      // a probe file marks THIS run dir
+      assert(StoreRoot.appendVectors(spark, root, 4L, slice(70, 80)))
+      val f2 = StoreRoot.beginCompactVectorsTiered(spark, root, fanout = 2)
+      assert(f2.isDefined && f2.get.tier == 2)
+      while (!f2.get.isDone) Thread.sleep(20)
+      val pending = TierRuns.pendingRuns(layout)
+      assert(pending.map(u => (u.tier, u.lo, u.hi)) == Seq((2, 0L, 3L)))
+      val runId = pending.head.run.get.getName.drop(1)
+      new java.io.File(pending.head.run.get, "_adopt_probe").createNewFile()
+      assert(window == "pre-swap")
+      val want2 = (want ++ (70L until 80L)).sorted
+      assert(served() == want2) // unreferenced: the sources still serve
+      // the next begin ADOPTS it (the probe rides the rename) and sweeps
+      // the two runs it covers; nothing is left to fold at fanout 2
+      assert(!StoreRoot.compactVectorsTiered(spark, root, fanout = 2))
+      assert(TierRuns.pendingRuns(layout).isEmpty)
+      assert(new java.io.File(dir, s"runs/t$runId/_adopt_probe").isFile)
+      assert(units == Seq((2, 0L, 3L), (0, 4L, 4L)), units)
+      assert(StoreFiles.publishedDirs(s"$dir/runs", "t", _ => true)
+        .size == 1)
+      assert(window == "none" && served() == want2)
       org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(vecs)
     } finally StoreFiles.deleteRec(base.toFile)
   }
@@ -327,7 +412,7 @@ class TieredFoldSpec extends SparkSpec {
       assert(fl.events.exists(e =>
         e.kind == "begun" && e.root == sRoot && e.tier >= 1), fl.events)
       // the stores hold runs, and fewer live units than triggers
-      assert(ShardSink.liveUnits(StoreRoot.currentDir(sRoot))
+      assert(TierRuns.liveUnits(ShardSink.layout(StoreRoot.currentDir(sRoot)))
         .exists(_.tier >= 1))
       org.apache.spark.sql.graftglue.GraftGlue.releaseCheckpoint(d)
     } finally StoreFiles.deleteRec(base.toFile)
